@@ -27,6 +27,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
 from deepref_spark import portable
+from deepref_spark.operators.linking import driver_rows
 
 # one pagerank point = 1e-9: BIGINT headroom is ~9.2e18 units, so the
 # grid supports total graph mass up to ~9.2e9 full points. At a
@@ -81,13 +82,6 @@ def _round6_spark(x: float) -> float:
                                            rounding=ROUND_HALF_UP))
 
 
-def _edge_rows_if_small(edges: DataFrame, conf_key: str = "deepref.graph.driver_max_edges"):
-    """Collected distinct (src, dst) list when the edge frame fits the
-    conf-gated driver cap, else None — the size-adaptive gate the
-    whole unit-grid family shares (see _collect_if_small below)."""
-    return _collect_if_small(edges.select("src", "dst"), conf_key)
-
-
 def pagerank(edges: DataFrame, iters: int = 3) -> DataFrame:
     """Fixed-iteration PageRank on the integer unit grid.
 
@@ -110,7 +104,7 @@ def pagerank(edges: DataFrame, iters: int = 3) -> DataFrame:
     # iteration runs on collected rows with exact Python integers —
     # bit-identical to the distributed floor-division grid; the loop
     # below stays the at-scale path.
-    rows = _edge_rows_if_small(edges)
+    rows = driver_rows(edges.select("src", "dst"))
     if rows is not None:
         import pandas as pd
         import pyspark.sql.types as T
@@ -324,7 +318,7 @@ def kcore(edges: DataFrame, k: int = 2, max_rounds: int = 16) -> DataFrame:
     """
     # size-adaptive (round 6): collected peeling under the driver cap;
     # the distributed round loop below stays the at-scale path.
-    rows = _edge_rows_if_small(edges)
+    rows = driver_rows(edges.select("src", "dst"))
     if rows is not None:
         import pandas as pd
         import pyspark.sql.types as T
@@ -432,7 +426,7 @@ def multihop(edges: DataFrame, max_hops: int = 3) -> DataFrame:
     # size-adaptive (round 6): exact path counting on collected rows
     # (Python ints never overflow); distributed matrix powers below
     # stay the at-scale path.
-    rows = _edge_rows_if_small(edges)
+    rows = driver_rows(edges.select("src", "dst"))
     if rows is not None:
         import pandas as pd
         import pyspark.sql.types as T
@@ -545,7 +539,7 @@ def triangle_counts(edges: DataFrame) -> DataFrame:
     """
     # size-adaptive (round 6): same degree-ordered orientation on
     # collected rows under the driver cap; distributed below at scale.
-    rows = _edge_rows_if_small(edges)
+    rows = driver_rows(edges.select("src", "dst"))
     if rows is not None:
         import pandas as pd
         import pyspark.sql.types as T
@@ -787,7 +781,7 @@ def label_prop(edges: DataFrame, iters: int = 2,
     # by construction — Python str comparison (code points) equals
     # Spark's binary UTF-8 ordering; the distributed loop below stays
     # the at-scale path.
-    rows = _edge_rows_if_small(und)
+    rows = driver_rows(und.select("src", "dst"))
     if rows is not None:
         import pandas as pd
         import pyspark.sql.types as T
@@ -860,7 +854,7 @@ def hits(edges: DataFrame, iters: int = 2) -> DataFrame:
     # size-adaptive (round 6): exact-integer driver twin of the grid
     # iteration (two-stage BIGINT normalization included); the
     # distributed loop below stays the at-scale path.
-    rows = _edge_rows_if_small(edges)
+    rows = driver_rows(edges.select("src", "dst"))
     if rows is not None:
         import pandas as pd
         import pyspark.sql.types as T
@@ -982,6 +976,37 @@ def transe_energy(triples: DataFrame,
     )
 
 
+def _driver_community_tally(und: DataFrame, labels: DataFrame):
+    """Driver twin of the label-tag joins community_quality and
+    modularity_profile share: (n_nodes, vol, internal, tv) — per-
+    community dicts plus the und row count — or None (take the
+    distributed path) when either frame fails ``driver_rows``, an
+    entity carries two labels, or no und row has both endpoints
+    labelled (the distributed aggregates are then empty or NULL)."""
+    rows = driver_rows(und.select("src", "dst"))
+    lab_rows = driver_rows(labels.select("entity", "community")) if rows else None
+    if lab_rows is None:
+        return None
+    lab = dict(lab_rows)
+    if len(lab) != len(lab_rows):
+        return None
+    n_nodes: dict = {}
+    for _, c in lab_rows:
+        n_nodes[c] = n_nodes.get(c, 0) + 1
+    vol: dict = {}
+    internal: dict = {}
+    for s, d in rows:
+        if s not in lab or d not in lab:  # inner-join semantics
+            continue
+        cs = lab[s]
+        vol[cs] = vol.get(cs, 0) + 1
+        if cs == lab[d]:
+            internal[cs] = internal.get(cs, 0) + 1
+    if not vol:
+        return None
+    return n_nodes, vol, internal, len(rows)
+
+
 def community_quality(edges: DataFrame, labels: DataFrame,
                       und: DataFrame | None = None) -> DataFrame:
     """Per-community quality profile (conductance) for a community
@@ -1006,53 +1031,34 @@ def community_quality(edges: DataFrame, labels: DataFrame,
         und = sym_closure(edges)  # feeds the tag join and total_vol once
     # size-adaptive (round 6): every output column is BIGINT
     # floor-division arithmetic on row counts, so the driver twin is
-    # exact; guarded on BOTH the und rows and the label rows fitting
-    # the cap (labels are entity-sized — never bigger than the edge
-    # frame that produced them, but the API accepts any frame).
-    rows = _edge_rows_if_small(und)
-    if rows is not None:
-        lab_rows = _collect_if_small(
-            labels.select("entity", "community"),
-            "deepref.graph.driver_max_edges")
-        if lab_rows is not None and len(dict(lab_rows)) == len(lab_rows):
-            import pandas as pd
-            import pyspark.sql.types as T
+    # exact (gate in _driver_community_tally).
+    tally = _driver_community_tally(und, labels)
+    if tally is not None:
+        import pandas as pd
+        import pyspark.sql.types as T
 
-            lab = dict(lab_rows)
-            n_nodes_m: dict = {}
-            for _, c in lab_rows:
-                n_nodes_m[c] = n_nodes_m.get(c, 0) + 1
-            vol: dict = {}
-            internal: dict = {}
-            for s, d in rows:
-                cs = lab.get(s)
-                if cs is None or d not in lab:  # inner-join semantics
-                    continue
-                vol[cs] = vol.get(cs, 0) + 1
-                if cs == lab[d]:
-                    internal[cs] = internal.get(cs, 0) + 1
-            tv = len(rows)
-            out_rows = []
-            for c in sorted(vol):
-                v, i = vol[c], internal.get(c, 0)
-                out_rows.append((
-                    c, n_nodes_m[c], v, i // 2, v - i,
-                    (v - i) * 1_000_000 // max(1, min(v, tv - v)),
-                ))
-            node_t = labels.schema["community"].dataType
-            schema = T.StructType([
-                T.StructField("community", node_t, False),
-                T.StructField("n_nodes", T.LongType(), False),
-                T.StructField("vol", T.LongType(), False),
-                T.StructField("internal_edges", T.LongType(), False),
-                T.StructField("cut", T.LongType(), False),
-                T.StructField("conductance_ppm", T.LongType(), False),
-            ])
-            return und.sparkSession.createDataFrame(
-                pd.DataFrame(out_rows, columns=[
-                    "community", "n_nodes", "vol", "internal_edges",
-                    "cut", "conductance_ppm"]),
-                schema=schema)
+        n_nodes_m, vol, internal, tv = tally
+        out_rows = []
+        for c in sorted(vol):
+            v, i = vol[c], internal.get(c, 0)
+            out_rows.append((
+                c, n_nodes_m[c], v, i // 2, v - i,
+                (v - i) * 1_000_000 // max(1, min(v, tv - v)),
+            ))
+        node_t = labels.schema["community"].dataType
+        schema = T.StructType([
+            T.StructField("community", node_t, False),
+            T.StructField("n_nodes", T.LongType(), False),
+            T.StructField("vol", T.LongType(), False),
+            T.StructField("internal_edges", T.LongType(), False),
+            T.StructField("cut", T.LongType(), False),
+            T.StructField("conductance_ppm", T.LongType(), False),
+        ])
+        return und.sparkSession.createDataFrame(
+            pd.DataFrame(out_rows, columns=[
+                "community", "n_nodes", "vol", "internal_edges",
+                "cut", "conductance_ppm"]),
+            schema=schema)
     lab_s = labels.select(F.col("entity").alias("src"), F.col("community").alias("c_src"))
     lab_d = labels.select(F.col("entity").alias("dst"), F.col("community").alias("c_dst"))
     tagged = und.join(lab_s, "src").join(lab_d, "dst")
@@ -1098,7 +1104,7 @@ def personalized_pagerank(edges: DataFrame, n_seeds: int = 3,
     edges = edges.localCheckpoint(eager=False)
     # size-adaptive (round 6): same exact-integer driver twin as
     # pagerank, seeds included (top-degree selection is deterministic)
-    rows = _edge_rows_if_small(edges)
+    rows = driver_rows(edges.select("src", "dst"))
     if rows is not None:
         import pandas as pd
         import pyspark.sql.types as T
@@ -1250,7 +1256,7 @@ def wl_refine(edges: DataFrame, iters: int = 2) -> DataFrame:
     # the portable ascii-combine hash + integer (sum, count) — all
     # reproduced exactly by hashlib/md5_mod_py (the anf_hyperball
     # precedent); the distributed loop below stays the at-scale path.
-    rows = _edge_rows_if_small(und)
+    rows = driver_rows(und.select("src", "dst"))
     if rows is not None:
         import hashlib
 
@@ -1434,7 +1440,7 @@ def ktruss(edges: DataFrame, k: int = 3, max_rounds: int = 8) -> DataFrame:
     # intersections on the collected edge list — exact integers, no
     # floats anywhere; same fixpoint/raise semantics as the
     # distributed peel below (which stays the at-scale path).
-    rows = _edge_rows_if_small(edges)
+    rows = driver_rows(edges.select("src", "dst"))
     if rows is not None:
         import pandas as pd
         import pyspark.sql.types as T
@@ -1579,7 +1585,7 @@ def bfs_distances(edges: DataFrame, n_seeds: int = 3,
     """
     # size-adaptive (round 6): multi-source BFS on collected rows under
     # the driver cap; the frontier loop below stays the at-scale path.
-    rows = _edge_rows_if_small(edges)
+    rows = driver_rows(edges.select("src", "dst"))
     if rows is not None:
         import pandas as pd
         import pyspark.sql.types as T
@@ -1737,7 +1743,7 @@ def anf_hyperball(edges: DataFrame, m: int = 16, hops: int = 2) -> DataFrame:
     # after h merge rounds == HLL of the exact h-ball) lets the driver
     # path compute registers straight from a collected-BFS ball under
     # the cap; the distributed merge below stays the at-scale path.
-    rows = _edge_rows_if_small(edges)
+    rows = driver_rows(edges.select("src", "dst"))
     if rows is not None:
         import hashlib
 
@@ -1916,9 +1922,9 @@ def taxonomy_closure(parent_edges: DataFrame,
     # size-adaptive (round 6): a type taxonomy is a small dimension at
     # any corpus scale (docstring below); under the driver cap the
     # closure is one collected delta-expansion instead of depth x 2
-    # jobs. Same conf-gated discipline as linking.connected_components;
+    # jobs (gate: linking.driver_rows, ``deepref.driver.max_rows``);
     # the semi-naive distributed loop stays the fallback.
-    collected = _collect_if_small(base, "deepref.taxonomy.driver_max_edges")
+    collected = driver_rows(base)
     if collected is not None:
         import pandas as pd
         import pyspark.sql.types as T
@@ -1966,30 +1972,6 @@ def taxonomy_closure(parent_edges: DataFrame,
         acc = acc.unionAll(delta).localCheckpoint(eager=False)
     raise RuntimeError(
         f"taxonomy_closure did not converge in {max_rounds} rounds")
-
-
-# Size-adaptive driver gate for the SCC family (round 6) — the same
-# measured trade as linking.DRIVER_CC_MAX_EDGES: below the cap, a
-# collected edge list + single-threaded Tarjan beats the multi-round
-# distributed loop by an order of magnitude; above it, the distributed
-# trim/color/sweep path below is the only thing that scales. The cap
-# bounds the one driver collect by construction (the VERDICT .collect()
-# audit discipline).
-DRIVER_SCC_MAX_EDGES = 200_000
-
-
-def _collect_if_small(edges: DataFrame, conf_key: str,
-                      default_cap: int = DRIVER_SCC_MAX_EDGES):
-    """Count the (materialized) 2-column edge frame; return the
-    collected edge list when it fits under the driver cap, else None
-    (caller falls through to the distributed path). The count doubles
-    as the materialization action for a lazy localCheckpoint, so the
-    upstream pipeline runs exactly once whichever path is taken."""
-    spark = edges.sparkSession
-    cap = int(spark.conf.get(conf_key, str(default_cap)))
-    if edges.count() > cap:
-        return None
-    return [(r[0], r[1]) for r in edges.collect()]
 
 
 def _tarjan_scc(edge_list) -> list:
@@ -2083,7 +2065,11 @@ def scc(edges: DataFrame, max_outer: int = 24,
     """
     E0 = edges.select("src", "dst").where(F.col("src") != F.col("dst")) \
         .distinct().localCheckpoint(eager=False)
-    collected = _collect_if_small(E0, "deepref.scc.driver_max_edges")
+    # size-adaptive (round 6): under the driver cap a collected edge
+    # list + single-threaded Tarjan beats the multi-round loop by an
+    # order of magnitude; the trim/color/sweep path below is the one
+    # that scales.
+    collected = driver_rows(E0)
     if collected is not None:
         if not collected:
             raise ValueError("scc: empty edge set")
@@ -2226,7 +2212,7 @@ def harmonic_centrality(edges: DataFrame, n_seeds: int = 3,
     # size-adaptive (round 6): per-seed BFS on collected rows under the
     # driver cap (exact integer h_units); distributed loop below stays
     # the at-scale path.
-    rows = _edge_rows_if_small(edges)
+    rows = driver_rows(edges.select("src", "dst"))
     if rows is not None:
         import pandas as pd
         import pyspark.sql.types as T
@@ -2339,7 +2325,7 @@ def scc_condensation(edges: DataFrame, labels: DataFrame | None = None,
     # levels and in/out degrees come from one collected pass instead
     # of rounds x 3 jobs of relaxation. Distributed relaxation below
     # stays the at-scale fallback.
-    q = _collect_if_small(ced, "deepref.scc.driver_max_edges")
+    q = driver_rows(ced)
     if q is not None:
         from collections import deque
 
@@ -2617,61 +2603,44 @@ def modularity_profile(edges: DataFrame, labels: DataFrame,
         und = sym_closure(edges)
     # size-adaptive (round 6): the ppm grid is all BIGINT floor
     # divisions on non-negative operands (Python // == Spark div
-    # there), so the driver twin is exact; same double gate as
-    # community_quality (und rows AND label rows under the cap); an
-    # EMPTY graph falls through (the distributed agg emits a NULL
-    # __total__ row there — keep that single source of truth).
-    rows = _edge_rows_if_small(und)
-    if rows:
-        lab_rows = _collect_if_small(
-            labels.select("entity", "community"),
-            "deepref.graph.driver_max_edges")
-        if lab_rows is not None and len(dict(lab_rows)) == len(lab_rows):
-            import pandas as pd
-            import pyspark.sql.types as T
+    # there), so the driver twin is exact; same gate as
+    # community_quality. A graph with no labelled edge falls through
+    # (the distributed agg emits a NULL-sum __total__ row there — keep
+    # that single source of truth).
+    tally = _driver_community_tally(und, labels)
+    if tally is not None:
+        import pandas as pd
+        import pyspark.sql.types as T
 
-            lab = dict(lab_rows)
-            n_nodes_m: dict = {}
-            for _, c in lab_rows:
-                n_nodes_m[c] = n_nodes_m.get(c, 0) + 1
-            vol: dict = {}
-            internal: dict = {}
-            for s, d in rows:
-                cs = lab.get(s)
-                if cs is None or d not in lab:  # inner-join semantics
-                    continue
-                vol[cs] = vol.get(cs, 0) + 1
-                if cs == lab[d]:
-                    internal[cs] = internal.get(cs, 0) + 1
-            tv = len(rows)
-            out_rows = []
-            for c in sorted(vol):
-                v, i = vol[c], internal.get(c, 0)
-                vpm = v * 1_000_000 // tv
-                out_rows.append((
-                    c, n_nodes_m[c], i // 2, v,
-                    i * 1_000_000 // tv - vpm * vpm // 1_000_000,
-                ))
+        n_nodes_m, vol, internal, tv = tally
+        out_rows = []
+        for c in sorted(vol):
+            v, i = vol[c], internal.get(c, 0)
+            vpm = v * 1_000_000 // tv
             out_rows.append((
-                "__total__",
-                sum(r[1] for r in out_rows),
-                sum(r[2] for r in out_rows),
-                sum(r[3] for r in out_rows),
-                sum(r[4] for r in out_rows),
+                c, n_nodes_m[c], i // 2, v,
+                i * 1_000_000 // tv - vpm * vpm // 1_000_000,
             ))
-            node_t = labels.schema["community"].dataType
-            schema = T.StructType([
-                T.StructField("community", node_t, False),
-                T.StructField("n_nodes", T.LongType(), False),
-                T.StructField("internal_edges", T.LongType(), False),
-                T.StructField("vol", T.LongType(), False),
-                T.StructField("modularity_ppm", T.LongType(), False),
-            ])
-            return und.sparkSession.createDataFrame(
-                pd.DataFrame(out_rows, columns=[
-                    "community", "n_nodes", "internal_edges", "vol",
-                    "modularity_ppm"]),
-                schema=schema)
+        out_rows.append((
+            "__total__",
+            sum(r[1] for r in out_rows),
+            sum(r[2] for r in out_rows),
+            sum(r[3] for r in out_rows),
+            sum(r[4] for r in out_rows),
+        ))
+        node_t = labels.schema["community"].dataType
+        schema = T.StructType([
+            T.StructField("community", node_t, False),
+            T.StructField("n_nodes", T.LongType(), False),
+            T.StructField("internal_edges", T.LongType(), False),
+            T.StructField("vol", T.LongType(), False),
+            T.StructField("modularity_ppm", T.LongType(), False),
+        ])
+        return und.sparkSession.createDataFrame(
+            pd.DataFrame(out_rows, columns=[
+                "community", "n_nodes", "internal_edges", "vol",
+                "modularity_ppm"]),
+            schema=schema)
     lab_s = labels.select(F.col("entity").alias("src"),
                           F.col("community").alias("c_src"))
     lab_d = labels.select(F.col("entity").alias("dst"),
@@ -2736,7 +2705,7 @@ def weighted_sssp(edges: DataFrame, n_seeds: int = 2,
     # bounded Bellman-Ford twin is exact on collected rows; seed rule
     # (md5(entity), entity) ASC reproduced with hashlib (md5 of the
     # node string — both engines hash the same bytes).
-    rows = _edge_rows_if_small(edges)
+    rows = driver_rows(edges.select("src", "dst"))
     if rows is not None:
         import hashlib
 
@@ -2828,7 +2797,7 @@ def katz_centrality(edges: DataFrame, max_hops: int = 4,
     """
     # size-adaptive (round 6): exact-integer mat-vec on collected rows
     # under the driver cap; distributed below at scale.
-    rows = _edge_rows_if_small(edges)
+    rows = driver_rows(edges.select("src", "dst"))
     if rows is not None:
         import pandas as pd
         import pyspark.sql.types as T
@@ -2924,7 +2893,7 @@ def stress_centrality(edges: DataFrame, n_seeds: int = 4,
     # size-adaptive (round 6): per-seed sigma-counting BFS on collected
     # rows under the driver cap; distributed loop below stays the
     # at-scale path.
-    rows = _edge_rows_if_small(edges)
+    rows = driver_rows(edges.select("src", "dst"))
     if rows is not None:
         import pandas as pd
         import pyspark.sql.types as T
@@ -3310,7 +3279,7 @@ def bowtie_regions(edges: DataFrame, labels: DataFrame | None = None,
     # closures are one collected BFS each instead of rounds x 3 jobs
     # of semi-naive frontier expansion; the distributed loop below is
     # the at-scale fallback.
-    q = _collect_if_small(ced, "deepref.scc.driver_max_edges")
+    q = driver_rows(ced)
     if q is not None:
         import pandas as pd
         import pyspark.sql.types as T

@@ -229,8 +229,8 @@ def mine_path_rules(triples: DataFrame, min_support: int = 2,
     round-6 pass-through pattern): callers that run several rule-lane
     analytics share ONE distinct (subj, pred, obj) projection and ONE
     distinct wedge table instead of replaying the self-join per query.
-    A passed ``body`` must match the ``hub_cap`` setting (the shared
-    stages are uncapped). ``hub_cap`` is the deterministic skew guard
+    A passed ``body`` is uncapped, so passing it with ``hub_cap``
+    raises ValueError. ``hub_cap`` is the deterministic skew guard
     for web-scale graphs:
     entities whose in-count × out-count exceeds the cap are EXCLUDED
     from the y position (never sampled — exclusion is reproducible
@@ -241,6 +241,8 @@ def mine_path_rules(triples: DataFrame, min_support: int = 2,
     link_prediction(hub_cap=...). Ratios are one double division of
     two BIGINTs, rounded 6dp.
     """
+    if body is not None and hub_cap is not None:
+        raise ValueError("mine_path_rules: hub_cap cannot apply to a pre-built body")
     if spo is None:
         spo = triples.select(
             F.col(subj).alias("subj"), F.col(pred).alias("pred"),

@@ -93,21 +93,39 @@ def similarity_edges(pairs: DataFrame, threshold: float = 0.6) -> DataFrame:
     )
 
 
-# Edge count below which CC runs as driver-side union-find. Same design
-# as a broadcast join (which also collects a bounded side to the driver).
-# Sized for PYTHON-HEAP reality, not raw bytes: 200k collected Rows with
-# string ids cost ~50-80 MB transiently (Row objects + parent/comp_min
-# dicts + the output list are each several hundred bytes/entry in
-# CPython — ~10x the serialized size), which keeps a default-sized
-# driver safe. Override with the conf key or the parameter; edge sets
-# above the cap take the pointer-doubling distributed loop.
-DRIVER_CC_MAX_EDGES = 200_000
+# Row count up to which an operator solves on the driver instead of
+# running its distributed loop. Same design as a broadcast join (which
+# also collects a bounded side to the driver). Sized for PYTHON-HEAP
+# reality, not raw bytes: 200k collected rows with string ids cost
+# ~50-80 MB transiently (row tuples + the twins' dicts + the output
+# list are each several hundred bytes/entry in CPython — ~10x the
+# serialized size), which keeps a default-sized driver safe. The conf
+# key ``deepref.driver.max_rows`` overrides it for every driver twin.
+DRIVER_MAX_ROWS = 200_000
 
 
-def _driver_union_find(spark, edges: DataFrame) -> DataFrame:
+def driver_rows(df: DataFrame) -> list[tuple] | None:
+    """The collected rows of ``df`` when the caller may solve on the
+    driver, else None (take the distributed path) — the one size gate
+    of every driver twin. One count() against ``deepref.driver.max_rows``
+    (it doubles as the materialization action for a caller's lazy
+    localCheckpoint, so the upstream runs once whichever path is taken),
+    then one collect(). A NULL anywhere also returns None: Python's
+    ``<`` and dict lookups do not follow SQL NULL semantics, so the
+    distributed path stays the one answer for such input."""
+    spark = df.sparkSession
+    if df.count() > int(spark.conf.get("deepref.driver.max_rows", str(DRIVER_MAX_ROWS))):
+        return None
+    rows = [tuple(r) for r in df.collect()]
+    if any(v is None for r in rows for v in r):
+        return None
+    return rows
+
+
+def _driver_union_find(spark, rows: list, node_t) -> DataFrame:
     """Union-find with path compression over a collected edge list —
     exact same (entity, component=min member) contract as the
-    distributed loop, for edge sets under the broadcast-ish threshold.
+    distributed loop, for edge sets under the driver cap.
     At that size the distributed loop pays seconds of per-round stage
     scheduling to do milliseconds of work; a production cluster makes
     the identical trade every time it broadcasts a join side."""
@@ -121,9 +139,7 @@ def _driver_union_find(spark, edges: DataFrame) -> DataFrame:
             parent[x], x = root, parent[x]
         return root
 
-    rows = edges.collect()
-    for r in rows:
-        a, b = r[0], r[1]
+    for a, b in rows:
         parent.setdefault(a, a)
         parent.setdefault(b, b)
         ra, rb = find(a), find(b)
@@ -138,25 +154,21 @@ def _driver_union_find(spark, edges: DataFrame) -> DataFrame:
     out = [(x, comp_min[find(x)]) for x in parent]
     from pyspark.sql.types import StructField, StructType
 
-    a_field = edges.schema[0]
     schema = StructType([
-        StructField("entity", a_field.dataType, False),
-        StructField("component", a_field.dataType, False),
+        StructField("entity", node_t, False),
+        StructField("component", node_t, False),
     ])
-    if not out:
-        return spark.createDataFrame([], schema)
     return spark.createDataFrame(out, schema)
 
 
-def connected_components(edges: DataFrame, max_iter: int = 20,
-                         driver_max_edges: int | None = None) -> DataFrame:
+def connected_components(edges: DataFrame, max_iter: int = 20) -> DataFrame:
     """(a, b) undirected edges -> (entity, component) with component =
     min member label.
 
-    Size-adaptive: below ``driver_max_edges`` (conf key
-    ``deepref.cc.driver_max_edges``) the graph is solved with driver
-    union-find — the broadcast-join trade, measured ~40x faster than
-    the loop at the few-thousand-edge scale the flagship produces.
+    Size-adaptive: under the driver cap (``driver_rows``) the graph is
+    solved with driver union-find — the broadcast-join trade, measured
+    ~40x faster than the loop at the few-thousand-edge scale the
+    flagship produces.
     Above it, distributed min-label propagation accelerated with
     POINTER DOUBLING (component := component[component], Shiloach-
     Vishkin style): chains collapse in O(log diameter) planned rounds
@@ -178,15 +190,9 @@ def connected_components(edges: DataFrame, max_iter: int = 20,
         .localCheckpoint(eager=False)
     )
     spark = edges.sparkSession
-    if driver_max_edges is None:
-        driver_max_edges = int(
-            spark.conf.get("deepref.cc.driver_max_edges", str(DRIVER_CC_MAX_EDGES))
-        )
-    # the count also materializes the lazy checkpoint, so the edge
-    # pipeline runs exactly once whichever path is taken
-    n_edges = edges.count()
-    if n_edges <= driver_max_edges:
-        return _driver_union_find(spark, edges)
+    rows = driver_rows(edges)
+    if rows is not None:
+        return _driver_union_find(spark, rows, edges.schema[0].dataType)
 
     sym = edges.union(edges.select(F.col("b").alias("a"), F.col("a").alias("b")))
     labels = (
@@ -246,7 +252,7 @@ def connected_components(edges: DataFrame, max_iter: int = 20,
             return labels
     raise RuntimeError(
         f"connected_components did not converge in {max_iter} rounds "
-        f"({n_edges} edges); raise max_iter — a silent partial merge "
+        f"({edges.count()} edges); raise max_iter — a silent partial merge "
         f"would corrupt every downstream canonical id"
     )
 
@@ -464,23 +470,23 @@ def sorted_neighborhood_pairs(entities: DataFrame,
 
     # size-adaptive (round 6): the whole derivation is two sorted
     # walks + window pairing on the distinct entity VOCABULARY — exact
-    # strings/integers, so under the driver cap it runs as one Python
-    # sort per pass (Python str order == Spark binary UTF-8 order, and
-    # Python [::-1] == Spark reverse() — both reverse characters); the
-    # two-phase ranked-cumsum path below stays the at-scale shape.
-    # The gate counts RAW input rows (>= the distinct count, so it is
-    # conservative) and dedupes on the driver — collecting the raw
-    # projection is a narrow read, while counting the distinct would
-    # pay the dedup shuffle before deciding to skip it.
-    raw = entities.select("entity")
+    # strings/integers, so under the driver cap (``driver_rows``) it
+    # runs as one Python sort per pass (Python str order == Spark binary
+    # UTF-8 order, and Python [::-1] == Spark reverse() — both reverse
+    # characters); the two-phase ranked-cumsum path below stays the
+    # at-scale shape. The gate counts RAW input rows (>= the distinct
+    # count, so it is conservative) and dedupes on the driver —
+    # collecting the raw projection is a narrow read, while counting
+    # the distinct would pay the dedup shuffle before deciding to skip
+    # it. A NULL entity takes the distributed path.
+    raw = entities.select("entity").localCheckpoint(eager=False)
     spark = raw.sparkSession
-    cap = int(spark.conf.get("deepref.er.driver_max_entities", "200000"))
-    raw = raw.localCheckpoint(eager=False)  # count + collect: one run
-    if raw.count() <= cap:
+    rows = driver_rows(raw)
+    if rows is not None:
         import pandas as pd
         import pyspark.sql.types as T
 
-        names = sorted({r[0] for r in raw.collect()})
+        names = sorted({r[0] for r in rows})
         w = int(window)
         pair_passes: dict = {}
         for pass_id, keyf in ((1, lambda e: e), (2, lambda e: e[::-1])):

@@ -83,12 +83,3 @@ def digit_blind_builtin(mentions: DataFrame) -> DataFrame:
         "token",
         F.expr("zip_with(token, pos_tags, (tok, p) -> IF(p = 'NUM', 'DIGIT', tok))"),
     )
-
-
-def with_variant_column(mentions: DataFrame, preprocessing_types: list[str]) -> DataFrame:
-    """Attach the variant partition key (the reference's directory name,
-    dataset.py:65-70) — variants are partition values here, not file
-    trees."""
-    return mentions.withColumn(
-        "preproc", F.lit(refsem.variant_key(preprocessing_types))
-    )

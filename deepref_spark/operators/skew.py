@@ -27,25 +27,3 @@ def salted_count(df: DataFrame, key_cols: list[str], salt: int = DEFAULT_SALT,
     )
     partial = salted.groupBy(*key_cols, "_salt").agg(F.count(F.lit(1)).alias("_pc"))
     return partial.groupBy(*key_cols).agg(F.sum("_pc").cast("long").alias(count_alias))
-
-
-def salted_agg(df: DataFrame, key_cols: list[str], aggs: dict[str, str],
-               salt: int = DEFAULT_SALT) -> DataFrame:
-    """General two-phase agg for decomposable functions.
-
-    ``aggs`` maps output column -> 'fn(col)' with fn in
-    {sum, count, min, max}. Each is computed partially per (key, salt)
-    then re-combined (count re-combines with sum)."""
-    salted = df.withColumn(
-        "_salt", F.pmod(F.hash(*[F.col(c) for c in df.columns]), F.lit(salt))
-    )
-    partial_exprs, final_exprs = [], []
-    for out, spec in aggs.items():
-        fn, col = spec.split("(", 1)
-        col = col.rstrip(")")
-        fn = fn.strip().lower()
-        partial_exprs.append(F.expr(f"{fn}({col})").alias(f"_p_{out}"))
-        refn = "sum" if fn in ("sum", "count") else fn
-        final_exprs.append(F.expr(f"{refn}(_p_{out})").alias(out))
-    partial = salted.groupBy(*key_cols, "_salt").agg(*partial_exprs)
-    return partial.groupBy(*key_cols).agg(*final_exprs)

@@ -144,17 +144,19 @@ def run_pipeline(spark: SparkSession, docs: DataFrame,
     """Full extraction; when ``warehouse`` is set, scored mentions and
     triples persist as resumable stage tables. ``engine`` selects the
     parse/preproc implementation ("arrow" default / "jvm" — see
-    extract_scored for the measured decision rule)."""
-    scored = extract_scored(spark, docs, preprocessing, engine=engine)
+    extract_scored for the measured decision rule). A resume builds
+    no extraction plan: the scored stage's compute runs only when the
+    stage is missing."""
     if warehouse:
         from deepref_spark.io import tables
 
         scored = tables.ensure_stage(
-            spark, warehouse, "scored", lambda: scored,
+            spark, warehouse, "scored",
+            lambda: extract_scored(spark, docs, preprocessing, engine=engine),
             lineage={"stage": "extract_scored", "preprocessing": preprocessing or []},
         )
         return tables.ensure_stage(
             spark, warehouse, "triples", lambda: triples_from_scored(scored),
             lineage={"stage": "triples"},
         )
-    return triples_from_scored(scored)
+    return triples_from_scored(extract_scored(spark, docs, preprocessing, engine=engine))

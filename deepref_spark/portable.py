@@ -374,11 +374,6 @@ def pair_decode(code: str, part: str, d: str) -> str:
     return f"CAST({code} % 8 AS INT)"
 
 
-def bit_xor(a: str, b: str, d: str) -> str:
-    """Bitwise XOR — '^' is power in DuckDB, so emit per dialect."""
-    return f"({a} ^ {b})" if d == SPARK else f"xor({a}, {b})"
-
-
 def popcount(expr: str, d: str) -> str:
     """Number of set bits (both engines ship bit_count over BIGINT)."""
     return f"bit_count({expr})"

@@ -69,11 +69,13 @@ clear_stage_cache = clear_mentions_cache
 
 def _stage(spark: SparkSession, sf_dir: str, name: str, build) -> DataFrame:
     """Persisted + memoized stage table per (application, sf_dir,
-    name); oldest entry evicted (and unpersisted) past the cache cap.
-    ``build`` is a zero-arg callable returning the stage DataFrame."""
+    name); least-recently-used entry evicted (and unpersisted) past the
+    cache cap. ``build`` is a zero-arg callable returning the stage
+    DataFrame."""
     key = (spark.sparkContext.applicationId, sf_dir, name)
-    cached = _STAGE_CACHE.get(key)
+    cached = _STAGE_CACHE.pop(key, None)
     if cached is not None:
+        _STAGE_CACHE[key] = cached  # a hit moves to the most-recent end
         return cached
     while len(_STAGE_CACHE) >= _STAGE_CACHE_MAX:
         old_key = next(iter(_STAGE_CACHE))
@@ -1952,13 +1954,6 @@ def kg_wordpiece_basic(spark, sf_dir):
 
 
 # --- Group B: corpus dedup / text analysis over `documents` -----------------
-
-
-
-def md5_slice_mod_duck(offset: int, m: int = 1_000_003) -> str:
-    from deepref_spark.portable import md5_slice_mod
-
-    return md5_slice_mod("h", offset, m)
 
 _NORM_DUCK = portable.norm_text("text", DUCK)
 _TOKS_DUCK = portable.norm_tokens("text", DUCK)

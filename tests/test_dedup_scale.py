@@ -7,7 +7,7 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, driver_cap
 
 
 def _mid_similarity_corpus(spark, n_docs: int = 20):
@@ -184,8 +184,9 @@ def test_cc_driver_and_distributed_paths_agree(spark):
     )
     fast = {r["entity"]: r["component"]
             for r in connected_components(edges).collect()}
-    dist = {r["entity"]: r["component"]
-            for r in connected_components(edges, driver_max_edges=0).collect()}
+    with driver_cap(spark, 0):
+        dist = {r["entity"]: r["component"]
+                for r in connected_components(edges).collect()}
     expected = {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 20: 20, 21: 20, 22: 20}
     assert fast == expected and dist == expected
 
@@ -198,9 +199,8 @@ def test_cc_pointer_doubling_converges_on_long_chain(spark):
     from deepref_spark.operators.linking import connected_components
 
     n = 300  # diameter 300 >> 2 hops/round * 20 rounds without doubling
-    comps = connected_components(
-        _path_edges(spark, n), max_iter=20, driver_max_edges=0
-    ).collect()
+    with driver_cap(spark, 0):
+        comps = connected_components(_path_edges(spark, n), max_iter=20).collect()
     assert all(r["component"] == 0 for r in comps)
     assert len(comps) == n + 1
 
@@ -212,21 +212,22 @@ def test_cc_raises_loudly_on_budget_exhaustion(spark):
 
     from deepref_spark.operators.linking import connected_components
 
-    with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(_path_edges(spark, 300), max_iter=1, driver_max_edges=0)
+    with driver_cap(spark, 0), pytest.raises(RuntimeError, match="did not converge"):
+        connected_components(_path_edges(spark, 300), max_iter=1)
 
 
 def test_cc_string_labels_min_component(spark):
     """String entities (the canonical_map case): component = lexicographic
     min member on both paths."""
-    from deepref_spark.operators.linking import connected_components
+    from deepref_spark.operators.linking import DRIVER_MAX_ROWS, connected_components
 
     edges = spark.createDataFrame(
         [("beta", "alpha"), ("beta", "gamma")], "a string, b string"
     )
-    for kw in ({}, {"driver_max_edges": 0}):
-        comps = {r["entity"]: r["component"]
-                 for r in connected_components(edges, **kw).collect()}
+    for cap in (DRIVER_MAX_ROWS, 0):
+        with driver_cap(spark, cap):
+            comps = {r["entity"]: r["component"]
+                     for r in connected_components(edges).collect()}
         assert comps == {"alpha": "alpha", "beta": "alpha", "gamma": "alpha"}
 
 

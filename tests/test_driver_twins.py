@@ -1,221 +1,170 @@
-"""Round-6 size-adaptive driver paths must be row-identical to the
-distributed fallbacks they gate (same discipline as the linking.py
-union-find twin): run each operator once with the default gate (driver
-path at test scale) and once with the cap forced to 0 (distributed
-path), and compare full sorted row sets exactly — including the
-floor-division grids and round(…, 6) semantics."""
+"""Every size-gated driver twin must be row-identical to the distributed
+path it short-cuts. Each TWINS entry runs once at the default
+``deepref.driver.max_rows`` (driver path at test scale) and once with
+it at 0 (distributed path); the full sorted row sets must match
+exactly, including the floor-division grids and round(…, 6) semantics.
+The table runs on the sf0.001 graph and on small adversarial graphs:
+NULL entities/communities, labels disjoint from the edges, duplicate
+entities and edges, self-loops."""
+
+from types import SimpleNamespace
 
 import pytest
+from pyspark.sql import functions as F
 
+from deepref_spark.operators import graph as G
+from deepref_spark.operators import linking as L
 from deepref_spark.queries import (
     _canonical_edges,
     _rank_taxonomy,
     _scc_aug_edges,
     clear_stage_cache,
 )
+from tests.conftest import driver_cap
 
 SF = "/root/testdata/sf0.001"
 
-GATES = (
-    "deepref.graph.driver_max_edges",
-    "deepref.scc.driver_max_edges",
-    "deepref.taxonomy.driver_max_edges",
-    "deepref.er.driver_max_entities",
-)
+# (name, build): build(fx) -> the operator's output frame. A fixture
+# fx carries edges (src, dst), aug (SCC input edges), tax (child,
+# parent), labels (entity, community) with und the symmetric closure
+# of edges, ents (entity) and pairs (a, b).
+TWINS = [
+    ("pagerank", lambda fx: G.pagerank(fx.edges, iters=3)),
+    ("personalized_pagerank",
+     lambda fx: G.personalized_pagerank(fx.edges, n_seeds=3, iters=3)),
+    ("hits", lambda fx: G.hits(fx.edges, iters=2)),
+    ("multihop", lambda fx: G.multihop(fx.edges, max_hops=3)),
+    ("bfs_distances", lambda fx: G.bfs_distances(fx.edges, n_seeds=3, max_hops=4)),
+    ("harmonic_centrality",
+     lambda fx: G.harmonic_centrality(fx.edges, n_seeds=3, max_hops=4)),
+    ("stress_centrality",
+     lambda fx: G.stress_centrality(fx.edges, n_seeds=4, max_hops=4)),
+    ("anf_hyperball", lambda fx: G.anf_hyperball(fx.edges, m=16, hops=2)),
+    ("kcore", lambda fx: G.kcore(fx.edges, k=3)),
+    ("triangle_counts", lambda fx: G.triangle_counts(fx.edges)),
+    ("katz", lambda fx: G.katz_centrality(fx.edges, max_hops=4, beta_inv=4)),
+    ("label_prop", lambda fx: G.label_prop(fx.edges, iters=2)),
+    ("community_quality",
+     lambda fx: G.community_quality(fx.edges, fx.labels, und=fx.und)),
+    ("modularity_profile",
+     lambda fx: G.modularity_profile(fx.edges, fx.labels, und=fx.und)),
+    ("wl_refine", lambda fx: G.wl_refine(fx.edges, iters=2)),
+    ("ktruss", lambda fx: G.ktruss(fx.edges, k=3, max_rounds=8)),
+    ("weighted_sssp", lambda fx: G.weighted_sssp(fx.edges, n_seeds=2, rounds=3)),
+    ("scc", lambda fx: G.scc(fx.aug)),
+    ("scc_condensation", lambda fx: G.scc_condensation(fx.aug)),
+    ("bowtie_regions", lambda fx: G.bowtie_regions(fx.aug)),
+    ("taxonomy_closure", lambda fx: G.taxonomy_closure(fx.tax)),
+    ("sorted_neighborhood",
+     lambda fx: L.sorted_neighborhood_pairs(fx.ents, window=3)),
+    ("connected_components", lambda fx: L.connected_components(fx.pairs)),
+]
+LABELLED = ("community_quality", "modularity_profile")
 
 
-def _rows(df):
-    return sorted(tuple(r) for r in df.collect())
-
-
-def _both_paths(spark, build):
-    driver = _rows(build())
-    for g in GATES:
-        spark.conf.set(g, "0")
-    try:
-        dist = _rows(build())
-    finally:
-        for g in GATES:
-            spark.conf.unset(g)
-    return driver, dist
+def _fixture(edges, tax, labels, ents, aug=None):
+    edges = edges.localCheckpoint()
+    return SimpleNamespace(
+        edges=edges, aug=edges if aug is None else aug.localCheckpoint(),
+        tax=tax.localCheckpoint(), labels=labels.localCheckpoint(),
+        und=G.sym_closure(edges).localCheckpoint(),
+        ents=ents.localCheckpoint(),
+        pairs=edges.select(F.col("src").alias("a"), F.col("dst").alias("b")))
 
 
 @pytest.fixture(scope="module")
-def edges(spark):
+def sf(spark):
     clear_stage_cache()
-    e = _canonical_edges(spark, SF).localCheckpoint()
-    yield e
-    clear_stage_cache()
-
-
-def test_pagerank_twin(spark, edges):
-    from deepref_spark.operators.graph import pagerank
-
-    a, b = _both_paths(spark, lambda: pagerank(edges, iters=3))
-    assert a == b and a
-
-
-def test_personalized_pagerank_twin(spark, edges):
-    from deepref_spark.operators.graph import personalized_pagerank
-
-    a, b = _both_paths(
-        spark, lambda: personalized_pagerank(edges, n_seeds=3, iters=3))
-    assert a == b and a
-
-
-def test_hits_twin(spark, edges):
-    from deepref_spark.operators.graph import hits
-
-    a, b = _both_paths(spark, lambda: hits(edges, iters=2))
-    assert a == b and a
-
-
-def test_multihop_twin(spark, edges):
-    from deepref_spark.operators.graph import multihop
-
-    a, b = _both_paths(spark, lambda: multihop(edges, max_hops=3))
-    assert a == b and a
-
-
-def test_bfs_distances_twin(spark, edges):
-    from deepref_spark.operators.graph import bfs_distances
-
-    a, b = _both_paths(
-        spark, lambda: bfs_distances(edges, n_seeds=3, max_hops=4))
-    assert a == b and a
-
-
-def test_harmonic_centrality_twin(spark, edges):
-    from deepref_spark.operators.graph import harmonic_centrality
-
-    a, b = _both_paths(
-        spark, lambda: harmonic_centrality(edges, n_seeds=3, max_hops=4))
-    assert a == b and a
-
-
-def test_stress_centrality_twin(spark, edges):
-    from deepref_spark.operators.graph import stress_centrality
-
-    a, b = _both_paths(
-        spark, lambda: stress_centrality(edges, n_seeds=4, max_hops=4))
-    assert a == b and a
-
-
-def test_anf_hyperball_twin(spark, edges):
-    from deepref_spark.operators.graph import anf_hyperball
-
-    a, b = _both_paths(spark, lambda: anf_hyperball(edges, m=16, hops=2))
-    assert a == b and a
-
-
-def test_kcore_twin(spark, edges):
-    from deepref_spark.operators.graph import kcore
-
-    a, b = _both_paths(spark, lambda: kcore(edges, k=3))
-    assert a == b and a
-
-
-def test_triangle_counts_twin(spark, edges):
-    from deepref_spark.operators.graph import triangle_counts
-
-    a, b = _both_paths(spark, lambda: triangle_counts(edges))
-    assert a == b and a
-
-
-def test_katz_twin(spark, edges):
-    from deepref_spark.operators.graph import katz_centrality
-
-    a, b = _both_paths(
-        spark, lambda: katz_centrality(edges, max_hops=4, beta_inv=4))
-    assert a == b and a
-
-
-def test_scc_family_twins(spark):
-    from deepref_spark.operators.graph import (
-        bowtie_regions,
-        scc,
-        scc_condensation,
-    )
-
-    clear_stage_cache()
-    aug = _scc_aug_edges(spark, SF).localCheckpoint()
-    for fn in (scc, scc_condensation, bowtie_regions):
-        a, b = _both_paths(spark, lambda: fn(aug))
-        assert a == b and a, fn.__name__
-    clear_stage_cache()
-
-
-def test_taxonomy_closure_twin(spark):
-    from deepref_spark.operators.graph import taxonomy_closure
-
-    clear_stage_cache()
-    _, tax = _rank_taxonomy(spark, SF)
-    tax = tax.localCheckpoint()
-    a, b = _both_paths(spark, lambda: taxonomy_closure(tax))
-    assert a == b and a
-    clear_stage_cache()
-
-
-def test_label_prop_twin(spark, edges):
-    from deepref_spark.operators.graph import label_prop
-
-    a, b = _both_paths(spark, lambda: label_prop(edges, iters=2))
-    assert a == b and a
-
-
-def test_community_quality_twin(spark, edges):
-    from deepref_spark.operators.graph import (
-        community_quality, label_prop, sym_closure,
-    )
-
-    und = sym_closure(edges).localCheckpoint()
-    labels = label_prop(edges, iters=2, und=und).localCheckpoint()
-    a, b = _both_paths(
-        spark, lambda: community_quality(edges, labels, und=und))
-    assert a == b and a
-
-
-def test_modularity_profile_twin(spark, edges):
-    from deepref_spark.operators.graph import (
-        label_prop, modularity_profile, sym_closure,
-    )
-
-    und = sym_closure(edges).localCheckpoint()
-    labels = label_prop(edges, iters=2, und=und).localCheckpoint()
-    a, b = _both_paths(
-        spark, lambda: modularity_profile(edges, labels, und=und))
-    assert a == b and a
-
-
-def test_wl_refine_twin(spark, edges):
-    from deepref_spark.operators.graph import wl_refine
-
-    a, b = _both_paths(spark, lambda: wl_refine(edges, iters=2))
-    assert a == b and a
-
-
-def test_ktruss_twin(spark, edges):
-    from deepref_spark.operators.graph import ktruss
-
-    a, b = _both_paths(spark, lambda: ktruss(edges, k=3, max_rounds=8))
-    assert a == b and a
-
-
-def test_weighted_sssp_twin(spark, edges):
-    from deepref_spark.operators.graph import weighted_sssp
-
-    a, b = _both_paths(
-        spark, lambda: weighted_sssp(edges, n_seeds=2, rounds=3))
-    assert a == b and a
-
-
-def test_sorted_neighborhood_twin(spark, edges):
-    from deepref_spark.operators.linking import sorted_neighborhood_pairs
-    from pyspark.sql import functions as F
-
+    edges = _canonical_edges(spark, SF).localCheckpoint()
     ents = (edges.select(F.col("src").alias("entity"))
-            .union(edges.select(F.col("dst").alias("entity")))
-            .distinct().localCheckpoint())
-    a, b = _both_paths(
-        spark, lambda: sorted_neighborhood_pairs(ents, window=3))
-    assert a == b and a
+            .union(edges.select(F.col("dst").alias("entity"))).distinct())
+    fx = _fixture(edges, _rank_taxonomy(spark, SF)[1],
+                  G.label_prop(edges, iters=2), ents,
+                  aug=_scc_aug_edges(spark, SF))
+    yield fx
+    clear_stage_cache()
+
+
+# two directed cycles (a-b-c, e-f-g-h) bridged by c->e and b->g
+_EDGES = [("a", "b"), ("b", "c"), ("c", "a"), ("c", "e"), ("e", "f"),
+          ("f", "g"), ("g", "h"), ("h", "e"), ("b", "g"), ("f", "e")]
+_LABELS = [("a", "x"), ("b", "x"), ("c", "x"), ("e", "y"), ("f", "y"),
+           ("g", "y"), ("zz", "z")]
+_TAX = [("t1", "t0"), ("t2", "t1"), ("t3", "t1"), ("t3", "t2")]
+ADVERSARIAL = {
+    # no NULL anywhere, so every gate takes the driver side at the
+    # default cap: self-loops, duplicate edges, duplicate entities,
+    # labels partly off the graph
+    "dirty": dict(edges=_EDGES + [("a", "b"), ("c", "c"), ("d", "d")],
+                  tax=_TAX + [("t1", "t0")], labels=_LABELS,
+                  ents=["a", "b", "b", "ab", "ba", "c", "c"]),
+    # a NULL sends the gate to the distributed path
+    "nulls": dict(edges=_EDGES + [(None, "a"), ("b", None)],
+                  tax=_TAX + [("t4", None)],
+                  labels=_LABELS + [("h", None), (None, "y")],
+                  ents=["a", "b", None, "ab"]),
+    "labels_disjoint": dict(edges=_EDGES, tax=_TAX,
+                            labels=[("p", "x"), ("q", "x"), ("r", "y")],
+                            ents=["a"]),
+    "labels_duplicate": dict(edges=_EDGES, tax=_TAX,
+                             labels=_LABELS + [("a", "y")], ents=["a"]),
+}
+
+
+@pytest.fixture(scope="module")
+def adversarial(spark):
+    def frame(rows, cols):
+        return spark.createDataFrame(rows, ", ".join(f"{c} string" for c in cols))
+
+    return {name: _fixture(frame(d["edges"], ("src", "dst")),
+                           frame(d["tax"], ("child", "parent")),
+                           frame(d["labels"], ("entity", "community")),
+                           frame([(e,) for e in d["ents"]], ("entity",)))
+            for name, d in ADVERSARIAL.items()}
+
+
+def _rows(df):
+    return sorted((tuple(r) for r in df.collect()), key=repr)
+
+
+def _twin(spark, monkeypatch, build, fx):
+    """Assert both paths return the same rows; return (rows, the side
+    each gate took on the default-cap run: True = driver)."""
+    sides, real = [], L.driver_rows
+
+    def gate(df):
+        rows = real(df)
+        sides.append(rows is not None)
+        return rows
+
+    monkeypatch.setattr(G, "driver_rows", gate)
+    monkeypatch.setattr(L, "driver_rows", gate)
+    driver = _rows(build(fx))
+    taken = list(sides)
+    with driver_cap(spark, 0):
+        dist = _rows(build(fx))
+    assert driver == dist
+    return driver, taken
+
+
+def _sf_test(build):
+    def test(spark, sf, monkeypatch):
+        rows, taken = _twin(spark, monkeypatch, build, sf)
+        assert rows and taken and all(taken)
+    return test
+
+
+# one test per operator, named after it
+for _name, _build in TWINS:
+    globals()[f"test_{_name}_twin"] = _sf_test(_build)
+
+
+@pytest.mark.parametrize("fx,build", [
+    pytest.param(fx, b, id=f"{n}-{fx}")
+    for fx in ADVERSARIAL for n, b in TWINS
+    if not fx.startswith("labels_") or n in LABELLED
+])
+def test_adversarial_twin(spark, adversarial, monkeypatch, fx, build):
+    _, taken = _twin(spark, monkeypatch, build, adversarial[fx])
+    if fx == "dirty":
+        assert taken and all(taken)

@@ -174,6 +174,16 @@ def test_rule_mining_excludes_reflexive_and_caps_hubs(spark):
     assert uncapped > 0 and capped == 0
 
 
+def test_rule_mining_rejects_hub_cap_with_prebuilt_body(spark):
+    """A pre-built body is uncapped; hub_cap must not be dropped silently."""
+    from deepref_spark.operators.kgquality import mine_path_rules
+
+    t = _triples(spark, [("a", "p", "h"), ("h", "q", "c")])
+    body = spark.createDataFrame([("a", "p", "q", "c")], "x string, p1 string, p2 string, z string")
+    with pytest.raises(ValueError, match="hub_cap"):
+        mine_path_rules(t, hub_cap=3, body=body)
+
+
 def test_inverse_symmetry_scores(spark):
     from deepref_spark.operators.kgquality import inverse_symmetry
 

@@ -103,6 +103,26 @@ def test_salted_count_equals_plain_groupby(spark):
     assert got == {"hot": 50, "cold": 3, "warm": 7}
 
 
+def test_confusion_matrix_counts_golden_pred_pairs(spark):
+    from deepref_spark.operators.metrics import confusion_matrix
+
+    preds = spark.createDataFrame(
+        [("a", "a"), ("a", "b"), ("a", "a"), ("b", "b")],
+        "relation string, pred_relation string")
+    got = {(r["golden"], r["pred"]): r["n"] for r in confusion_matrix(preds).collect()}
+    assert got == {("a", "a"): 2, ("a", "b"): 1, ("b", "b"): 1}
+
+
+def test_sentence_length_histogram(spark):
+    from deepref_spark.operators.metrics import sentence_length_histogram
+
+    mentions = spark.createDataFrame(
+        [(["x", "y"],), (["z", "w"],), (["v"],)], "token array<string>")
+    got = {r["sentence_length"]: r["n"]
+           for r in sentence_length_histogram(mentions).collect()}
+    assert got == {2: 2, 1: 1}
+
+
 def test_exact_dedup(spark):
     df = spark.createDataFrame(
         [(1, "same text here"), (2, "same text here"), (3, "different")],

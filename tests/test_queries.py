@@ -198,3 +198,26 @@ def test_queries_import_is_io_free():
     r = subprocess.run([sys.executable, "-c", code], cwd=repo,
                        env={"PYTHONPATH": repo, "PATH": "/usr/bin:/bin"})
     assert r.returncode == 0, "duckdb was imported at queries import time"
+
+
+def test_stage_cache_keeps_a_hot_stage_through_64_insertions(spark):
+    """_stage evicts the least-recently-used entry: a stage read between
+    insertions is never rebuilt, while the cache cap still holds."""
+    from deepref_spark.queries import _STAGE_CACHE, _STAGE_CACHE_MAX, _stage, clear_stage_cache
+
+    builds = []
+
+    def hot():
+        builds.append(1)
+        return spark.range(1)
+
+    clear_stage_cache()
+    try:
+        _stage(spark, "lru", "hot", hot)
+        for i in range(64):
+            _stage(spark, "lru", f"cold{i}", lambda: spark.range(1))
+            _stage(spark, "lru", "hot", hot)
+        assert len(builds) == 1
+        assert len(_STAGE_CACHE) == _STAGE_CACHE_MAX
+    finally:
+        clear_stage_cache()

@@ -46,6 +46,11 @@ def test_untag_first_occurrence_only():
     assert refsem.untag_tokens(toks) == ["a", "b", "c", "d", "e"]
 
 
+def test_untag_sentence_string_form():
+    tagged = "ENTITYSTART x ENTITYEND y ENTITYOTHERSTART z ENTITYOTHEREND ENTITYSTART"
+    assert refsem.untag_sentence(tagged) == "x y z ENTITYSTART"
+
+
 def test_get_entities_head_first():
     tagged = "the ENTITYSTART quick fox ENTITYEND jumped over ENTITYOTHERSTART dogs ENTITYOTHEREND today".split()
     original = refsem.untag_tokens(tagged)
