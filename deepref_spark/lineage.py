@@ -1,9 +1,8 @@
 """Per-partition lineage + metrics rows (north_rule; SURVEY.md §2.8).
 
 The reference tracks a driver-side AverageMeter (framework/utils.py:1-29).
-Distributed equivalent: a mapPartitions wrapper that counts rows per
-physical partition and emits side rows into a metrics table, plus Spark
-accumulators for cheap global counters. Metrics rows carry
+Distributed equivalent: a grouped count of rows per physical partition,
+emitted as side rows into a metrics table. Metrics rows carry
 (stage, partition_id, rows) — enough to reconstruct
 per-partition balance (the skew evidence) after a run.
 """
@@ -23,18 +22,3 @@ def partition_metrics(df: DataFrame, stage: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("rows"))
         .select(F.lit(stage).alias("stage"), "partition_id", "rows")
     )
-
-
-class StageCounter:
-    """Accumulator-backed row counter usable inside pandas-UDF kernels."""
-
-    def __init__(self, spark, name: str):
-        self.name = name
-        self.acc = spark.sparkContext.accumulator(0)
-
-    def add(self, n: int) -> None:
-        self.acc.add(n)
-
-    @property
-    def value(self) -> int:
-        return self.acc.value

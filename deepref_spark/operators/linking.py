@@ -15,17 +15,30 @@ Stages:
      driver-controlled loop, executor-side joins;
   5. canonical id = lexicographically smallest member of the component.
 
-Skew: the hot-entity head of the distribution makes the canonical
-groupBy skewed; callers aggregate with the two-phase salted helper in
-operators/skew.py.
+Both CC and the whole map are size-adaptive under the one driver gate
+(``driver_rows``): ``connected_components`` solves an edge set under
+the cap with driver union-find, and ``canonical_map`` computes stages
+1-5 on the driver when the distinct names and their blocks' candidate
+pairs fit the cap.
+
+Skew: the hot-entity head of the distribution makes the joins of the
+map back onto the triples skewed; ``pipeline.triples_from_scored``
+broadcasts the map when ``size_gated_broadcast`` proves it small and
+otherwise leaves the shuffle join to AQE's skew-join splitting.
 """
 
 from __future__ import annotations
 
+from collections import defaultdict
+from functools import cache
+from itertools import combinations
+
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
+from pyspark.sql.types import StringType, StructField, StructType
 
 from deepref_spark.portable import md5_mod
+from deepref_spark.refsem import md5_mod_py
 
 N_BANDS = 4
 NGRAM = 3
@@ -104,6 +117,11 @@ def similarity_edges(pairs: DataFrame, threshold: float = 0.6) -> DataFrame:
 DRIVER_MAX_ROWS = 200_000
 
 
+def driver_max_rows(spark) -> int:
+    """The driver cap: ``deepref.driver.max_rows``, else DRIVER_MAX_ROWS."""
+    return int(spark.conf.get("deepref.driver.max_rows", str(DRIVER_MAX_ROWS)))
+
+
 def driver_rows(df: DataFrame) -> list[tuple] | None:
     """The collected rows of ``df`` when the caller may solve on the
     driver, else None (take the distributed path) — the one size gate
@@ -113,8 +131,7 @@ def driver_rows(df: DataFrame) -> list[tuple] | None:
     then one collect(). A NULL anywhere also returns None: Python's
     ``<`` and dict lookups do not follow SQL NULL semantics, so the
     distributed path stays the one answer for such input."""
-    spark = df.sparkSession
-    if df.count() > int(spark.conf.get("deepref.driver.max_rows", str(DRIVER_MAX_ROWS))):
+    if df.count() > driver_max_rows(df.sparkSession):
         return None
     rows = [tuple(r) for r in df.collect()]
     if any(v is None for r in rows for v in r):
@@ -122,13 +139,13 @@ def driver_rows(df: DataFrame) -> list[tuple] | None:
     return rows
 
 
-def _driver_union_find(spark, rows: list, node_t) -> DataFrame:
-    """Union-find with path compression over a collected edge list —
-    exact same (entity, component=min member) contract as the
-    distributed loop, for edge sets under the driver cap.
-    At that size the distributed loop pays seconds of per-round stage
-    scheduling to do milliseconds of work; a production cluster makes
-    the identical trade every time it broadcasts a join side."""
+def union_find(pairs) -> dict:
+    """node -> minimum member of its component, for every node of an
+    (a, b) edge list: union-find with path compression, the driver
+    solve behind both ``connected_components`` and ``canonical_map``.
+    At driver-cap size the distributed loop pays seconds of per-round
+    stage scheduling to do milliseconds of work; a production cluster
+    makes the identical trade every time it broadcasts a join side."""
     parent: dict = {}
 
     def find(x):
@@ -139,7 +156,7 @@ def _driver_union_find(spark, rows: list, node_t) -> DataFrame:
             parent[x], x = root, parent[x]
         return root
 
-    for a, b in rows:
+    for a, b in pairs:
         parent.setdefault(a, a)
         parent.setdefault(b, b)
         ra, rb = find(a), find(b)
@@ -151,14 +168,7 @@ def _driver_union_find(spark, rows: list, node_t) -> DataFrame:
         m = comp_min.get(r)
         if m is None or x < m:
             comp_min[r] = x
-    out = [(x, comp_min[find(x)]) for x in parent]
-    from pyspark.sql.types import StructField, StructType
-
-    schema = StructType([
-        StructField("entity", node_t, False),
-        StructField("component", node_t, False),
-    ])
-    return spark.createDataFrame(out, schema)
+    return {x: comp_min[find(x)] for x in parent}
 
 
 def connected_components(edges: DataFrame, max_iter: int = 20) -> DataFrame:
@@ -192,7 +202,10 @@ def connected_components(edges: DataFrame, max_iter: int = 20) -> DataFrame:
     spark = edges.sparkSession
     rows = driver_rows(edges)
     if rows is not None:
-        return _driver_union_find(spark, rows, edges.schema[0].dataType)
+        node_t = edges.schema[0].dataType
+        schema = StructType([StructField("entity", node_t, False),
+                             StructField("component", node_t, False)])
+        return spark.createDataFrame(list(union_find(rows).items()), schema)
 
     sym = edges.union(edges.select(F.col("b").alias("a"), F.col("a").alias("b")))
     labels = (
@@ -257,11 +270,55 @@ def connected_components(edges: DataFrame, max_iter: int = 20) -> DataFrame:
     )
 
 
+def _driver_canonical(names: list, threshold: float, max_pairs: int) -> list | None:
+    """The whole canonical map solved on the driver over the collected
+    distinct names: the same shingles, band minhashes, blocks, Jaccard
+    edges and component minima as the distributed path, row for row
+    (Python ``str`` order is Spark's UTF-8 binary order). None when the
+    blocks would enumerate more than ``max_pairs`` candidate pairs —
+    sized from the block sizes before any pair exists, since blocks
+    grow with the vocabulary and the name count alone does not bound
+    the work."""
+    shingles = {}
+    for e in names:
+        p = f"^{e}$"
+        shingles[e] = {p[i:i + NGRAM] for i in range(max(1, len(p) - (NGRAM - 1)))}
+
+    @cache
+    def band_hash(b, s):
+        return md5_mod_py(f"{b}:{s}", HASH_SPACE)
+
+    blocks = defaultdict(list)
+    for e, sh in shingles.items():
+        for b in range(N_BANDS):
+            blocks[(b, min(HASH_SPACE, *(band_hash(b, s) for s in sh)))].append(e)
+    if sum(len(m) * (len(m) - 1) // 2 for m in blocks.values()) > max_pairs:
+        return None
+    pairs = {ab for m in blocks.values() for ab in combinations(sorted(m), 2)}
+    comp = union_find(
+        (a, b) for a, b in pairs
+        if len(shingles[a] & shingles[b]) / len(shingles[a] | shingles[b]) >= threshold)
+    return [(e, comp.get(e, e)) for e in names]
+
+
 def canonical_map(entities: DataFrame, name_col: str = "entity",
                   threshold: float = 0.6) -> DataFrame:
     """entity -> canonical entity (component min). Singletons map to
-    themselves."""
+    themselves.
+
+    Size-adaptive like ``connected_components``: when the distinct
+    names pass ``driver_rows`` and their blocks' candidate pairs fit
+    the same cap, ``_driver_canonical`` computes the whole map from one
+    collect — no minhash, self-join, CC loop or join back. Otherwise
+    (more names or pairs, a NULL name, a non-string column) the
+    distributed path below."""
     ents = entities.select(F.col(name_col).alias("entity")).distinct().localCheckpoint(eager=False)
+    spark = ents.sparkSession
+    rows = driver_rows(ents) if ents.schema[0].dataType == StringType() else None
+    if rows is not None:
+        canon = _driver_canonical([e for (e,) in rows], threshold, driver_max_rows(spark))
+        if canon is not None:
+            return spark.createDataFrame(canon, "entity string, canonical string")
     # signatures feed BOTH sides of the LSH self-join — stage them so
     # the shingle/minhash derivation runs once, not per join side
     sigs = minhash_signatures(ents).localCheckpoint(eager=False)

@@ -34,6 +34,11 @@ def get_spark(
     shuffle_partitions: int = DEFAULT_SHUFFLE_PARTITIONS,
     extra_conf: dict | None = None,
 ) -> SparkSession:
+    """A local session with the project's planner defaults.
+
+    ``spark.driver.memory`` is 8g unless ``SPARK_DRIVER_MEMORY`` sets
+    it: one session that runs the whole test suite has reached 7.2 GB
+    resident, so lower it when another JVM shares the host."""
     if cores is None:
         cores = os.environ.get("SPARK_GRAFT_CPUS", "*")
     builder = (

@@ -49,9 +49,11 @@ def sessionize(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
     """Batch sessionization: per-user session ids from gaps > threshold
     (lag + cumulative sum), then per-session rollup."""
     w = Window.partitionBy("user_id").orderBy("ts")
-    # parquet µs timestamps read as TIMESTAMP_NTZ can't cast straight to
-    # long; hop through timestamp (session TZ pinned to UTC)
-    secs = F.col("ts").cast("timestamp").cast("long")
+    # fractional seconds as a double, like the SQL twin's epoch(): a
+    # whole-second cast would fold a 1800.5 s gap into one session.
+    # parquet µs timestamps read as TIMESTAMP_NTZ hop through timestamp
+    # (session TZ pinned to UTC)
+    secs = F.unix_micros(F.col("ts").cast("timestamp")) / 1e6
     gap = secs - F.lag(secs).over(w)
     marked = (
         F.when(gap.isNull() | (gap > gap_minutes * 60), F.lit(1)).otherwise(F.lit(0))

@@ -5,7 +5,7 @@ it at 0 (distributed path); the full sorted row sets must match
 exactly, including the floor-division grids and round(…, 6) semantics.
 The table runs on the sf0.001 graph and on small adversarial graphs:
 NULL entities/communities, labels disjoint from the edges, duplicate
-entities and edges, self-loops."""
+entities and edges, self-loops, and a vocabulary of awkward names."""
 
 from types import SimpleNamespace
 
@@ -58,8 +58,10 @@ TWINS = [
     ("sorted_neighborhood",
      lambda fx: L.sorted_neighborhood_pairs(fx.ents, window=3)),
     ("connected_components", lambda fx: L.connected_components(fx.pairs)),
+    ("canonical_map", lambda fx: L.canonical_map(fx.ents)),
 ]
 LABELLED = ("community_quality", "modularity_profile")
+NAMED = ("sorted_neighborhood", "canonical_map")
 
 
 def _fixture(edges, tax, labels, ents, aug=None):
@@ -108,7 +110,18 @@ ADVERSARIAL = {
                             ents=["a"]),
     "labels_duplicate": dict(edges=_EDGES, tax=_TAX,
                              labels=_LABELS + [("a", "y")], ents=["a"]),
+    # empty, one-character, non-ASCII, duplicate and near-duplicate
+    # names; no NULL, so every gate takes the driver side
+    "vocab": dict(edges=_EDGES, tax=_TAX, labels=_LABELS,
+                  ents=["", "", "a", "b", "ab", "café", "cafe", "cafè", "Café",
+                        "東京都", "東京", "北京市", "smith", "smyth", "smiths",
+                        "john smith", "smith john", "jonathan smith",
+                        "jonathan smyth", "東京都渋谷区役所", "東京都渋谷区役場",
+                        "aaaa", "aaa", "x" * 40, "x" * 39 + "y", "smith"]),
 }
+# fixtures that run only for some operators (all others run the table)
+ONLY = {"labels_disjoint": LABELLED, "labels_duplicate": LABELLED,
+        "vocab": NAMED}
 
 
 @pytest.fixture(scope="module")
@@ -162,9 +175,31 @@ for _name, _build in TWINS:
 @pytest.mark.parametrize("fx,build", [
     pytest.param(fx, b, id=f"{n}-{fx}")
     for fx in ADVERSARIAL for n, b in TWINS
-    if not fx.startswith("labels_") or n in LABELLED
+    if n in ONLY.get(fx, (n,))
 ])
 def test_adversarial_twin(spark, adversarial, monkeypatch, fx, build):
     _, taken = _twin(spark, monkeypatch, build, adversarial[fx])
-    if fx == "dirty":
+    if fx in ("dirty", "vocab"):
         assert taken and all(taken)
+
+
+def test_canonical_map_pair_guard(spark, monkeypatch):
+    """Names under the cap whose blocks hold more candidate pairs than
+    the cap: the map takes the distributed path, with the same rows."""
+    names = [f"smithson{i:02d}" for i in range(40)] + ["jones"]
+    assert L._driver_canonical(names, 0.6, len(names)) is None
+    ents = spark.createDataFrame([(n,) for n in names], "entity string")
+    solved, real = [], L._driver_canonical
+
+    def twin(*a):
+        out = real(*a)
+        solved.append(out is not None)
+        return out
+
+    monkeypatch.setattr(L, "_driver_canonical", twin)
+    driver = _rows(L.canonical_map(ents))
+    with driver_cap(spark, len(names)):
+        guarded = _rows(L.canonical_map(ents))
+    assert solved == [True, False]
+    assert guarded == driver
+    assert ("smithson01", "smithson00") in driver

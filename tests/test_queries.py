@@ -221,3 +221,52 @@ def test_stage_cache_keeps_a_hot_stage_through_64_insertions(spark):
         assert len(_STAGE_CACHE) == _STAGE_CACHE_MAX
     finally:
         clear_stage_cache()
+
+
+def test_registry_oracle_fingerprint(registry):
+    """Registry order plus every oracle text, hashed: any edit to an
+    oracle's SQL (or a reordering of the registry, which the driver's
+    first-50 window depends on) changes the digest."""
+    import hashlib
+
+    from deepref_spark.queries import oracle_sql_for
+
+    h = hashlib.sha256()
+    for name in list(registry):
+        o = oracle_sql_for(name)
+        h.update(name.encode() + b"\0"
+                 + (b"\1" + o.encode() if o is not None else b"\0") + b"\0")
+    assert len(registry) == 345
+    assert sum(registry[n]["oracle"] is not None for n in registry) == 338
+    assert h.hexdigest() == "46ac5dbe1726ebf62ac6545487732e2e6745b8b7958f77ad610696dcd4168d11"
+
+
+def test_sessionize_sub_second_gap(spark, registry, tmp_path):
+    """A 1800.5 s gap is over the 30-minute rule (2 sessions) and an
+    exact 1800 s gap is not (1 session), as in the oracle's
+    epoch() doubles; a whole-second gap would merge the first pair."""
+    import duckdb
+    import pandas as pd
+
+    from deepref_spark.queries import oracle_sql_for
+
+    t0 = pd.Timestamp("2024-01-01 10:00:00.250")
+    pd.DataFrame({
+        "event_id": [1, 2, 3, 4],
+        "ts": [t0, t0 + pd.Timedelta(seconds=1800.5),
+               t0, t0 + pd.Timedelta(seconds=1800)],
+        "user_id": [1, 1, 2, 2],
+        "event_type": ["view"] * 4,
+        "value": [1.0, 2.0, 4.0, 8.0],
+        "props": ["{}"] * 4,
+    }).astype({"ts": "datetime64[us]"}).to_parquet(tmp_path / "events.parquet")
+    sessions = registry["events_sessionize"]["spark"](spark, str(tmp_path)).collect()
+    assert sorted((r["user_id"], r["n_events"]) for r in sessions) == [(1, 1), (1, 1), (2, 2)]
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW events AS SELECT * FROM read_parquet('{tmp_path}/events.parquet')")
+    try:
+        ok, detail = compare_query(spark, con, registry["events_sessionize"]["spark"],
+                                   oracle_sql_for("events_sessionize"), str(tmp_path))
+    finally:
+        con.close()
+    assert ok, detail
