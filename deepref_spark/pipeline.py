@@ -108,7 +108,12 @@ def triples_from_scored(scored: DataFrame, canonicalize: bool = True,
             .union(triples.select(F.col("obj").alias("entity")))
             .distinct()
         )
-        canon = linking.canonical_map(ents).cache()
+        # lazy local checkpoint, not cache(): size_gated_broadcast's
+        # count() materializes it, both joins read it, and the
+        # ContextCleaner frees it once the plan is dropped. No caller
+        # could unpersist a cache() of it, so each call would leave a
+        # CacheManager entry for the session's life.
+        canon = linking.canonical_map(ents).localCheckpoint(eager=False)
         # broadcast only when the entity map is provably small — at
         # 10^12 docs the distinct-entity table is not broadcast-sized
         # and the gate falls back to a shuffle join (AQE skew-handled)

@@ -56,6 +56,14 @@ def get_spark(
         # so the trade can be re-measured per deployment.
         .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
                 os.environ.get("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "true"))
+        # let AQE coalesce a persisted plan's final exchange too. Spark
+        # 4 otherwise keeps a cached plan's output partitioning, so a
+        # queries._stage cached behind a shuffle would hold
+        # shuffle_partitions blocks (128 for a few hundred rows) and
+        # every read of it would launch 128 tasks. Coalesced, a stage
+        # holds partitions sized by its data; shuffle_partitions itself
+        # stays fixed for the N -> 4N scaling gate above.
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "4096")

@@ -173,6 +173,19 @@ def test_size_gated_broadcast_non_broadcast_path(spark, docs):
     assert shuffled == broadcasted
 
 
+def test_run_pipeline_leaves_no_cache_entry(spark, docs):
+    """Canonicalization's entity map is staged for the two joins only:
+    nothing unpersists it, so repeated run_pipeline calls in one
+    session must not add CacheManager entries."""
+    from deepref_spark.pipeline import run_pipeline
+
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    before = cache_manager.numCachedEntries()
+    for _ in range(2):
+        run_pipeline(spark, docs).collect()
+    assert cache_manager.numCachedEntries() == before
+
+
 def test_checkpoint_resume_reuses_stage_tables(spark, docs, tmp_path):
     """north rule: resumable from checkpoint. Second run with the same
     warehouse must return bit-identical triples AND read them from the

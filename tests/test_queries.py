@@ -223,6 +223,22 @@ def test_stage_cache_keeps_a_hot_stage_through_64_insertions(spark):
         clear_stage_cache()
 
 
+def test_cached_stages_are_sized_by_their_data(spark, registry):
+    """A stage persisted behind a shuffle holds AQE-coalesced
+    partitions, not one block per spark.sql.shuffle.partitions: a few
+    hundred rows must not cost a shuffle_partitions-task scan on every
+    read."""
+    from deepref_spark.queries import _STAGE_CACHE
+
+    for name in ("kg_canonical_triples", "kg_connected_components"):
+        registry[name]["spark"](spark, SF).collect()
+    shuffle_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    app = spark.sparkContext.applicationId
+    for stage in ("canon_triples", "banded_edges"):
+        n = _STAGE_CACHE[(app, SF, stage)].rdd.getNumPartitions()
+        assert n < shuffle_partitions, (stage, n, shuffle_partitions)
+
+
 def test_registry_oracle_fingerprint(registry):
     """Registry order plus every oracle text, hashed: any edit to an
     oracle's SQL (or a reordering of the registry, which the driver's
