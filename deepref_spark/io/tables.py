@@ -21,6 +21,7 @@ import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType, _parse_datatype_string
 
 MANIFEST = "_STAGE_MANIFEST.json"
 
@@ -89,46 +90,53 @@ def _fs_exists(spark: SparkSession | None, path: str) -> bool:
 def write_stage(df: DataFrame, warehouse: str, stage: str,
                 partition_by: list[str] | None = None,
                 lineage: dict | None = None) -> str:
+    """Write ``df`` as the stage's parquet table, then its manifest. The
+    manifest's row count is observed on the write itself, so no second
+    job re-reads the table to count it; each call observes under its
+    own name, since one name may not appear twice in a plan."""
+    import uuid
+
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
     path = stage_path(warehouse, stage)
-    writer = df.write.mode("overwrite")
+    obs = Observation(f"write_stage:{stage}:{uuid.uuid4().hex}")
+    writer = df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)
-    spark = df.sparkSession
-    n = spark.read.parquet(path).count()
     manifest = {
         "stage": stage,
-        "rows": n,
+        "rows": obs.get["rows"],
         "schema": df.schema.simpleString(),
         "partition_by": partition_by or [],
         "lineage": lineage or {},
     }
     # Hadoop FS write: the manifest must land on the SAME filesystem as
     # the parquet (hdfs://, s3a://, ...) or cluster resume never fires
-    _fs_write_text(spark, os.path.join(path, MANIFEST), json.dumps(manifest, indent=1))
+    _fs_write_text(df.sparkSession, os.path.join(path, MANIFEST),
+                   json.dumps(manifest, indent=1))
     return path
 
 
-def stage_complete(warehouse: str, stage: str,
-                   spark: SparkSession | None = None) -> bool:
-    """Complete = the manifest exists AND parses as JSON. The parse
-    guard covers manifests written before the temp+rename protocol (an
-    existence-only check let a crash-truncated manifest mark a stage
-    complete and corrupt later lineage reads)."""
+def _read_manifest(warehouse: str, stage: str,
+                  spark: SparkSession | None = None) -> dict | None:
+    """The stage's manifest, or None when it is missing or does not
+    parse as JSON. The parse guard covers manifests written before the
+    temp+rename protocol (an existence-only check let a crash-truncated
+    manifest mark a stage complete and corrupt later lineage reads)."""
     path = os.path.join(stage_path(warehouse, stage), MANIFEST)
     if spark is None:
         spark = SparkSession.getActiveSession()
     try:
         if spark is None:  # no JVM at hand: local-path semantics only
             with open(path) as f:
-                json.load(f)
-        else:
-            if not _fs_exists(spark, path):
-                return False
-            json.loads(_fs_read_text(spark, path))
-        return True
+                return json.load(f)
+        if not _fs_exists(spark, path):
+            return None
+        return json.loads(_fs_read_text(spark, path))
     except (OSError, ValueError):
-        return False
+        return None
     except Exception as e:  # noqa: BLE001 — JVM-side read races
         # a manifest deleted between _fs_exists and _fs_read_text
         # (exactly the window _fs_write_text's delete-then-rename
@@ -136,22 +144,53 @@ def stage_complete(warehouse: str, stage: str,
         # not OSError — incomplete is the correct answer, same as the
         # local-path semantics; anything non-IO still propagates
         if type(e).__name__ == "Py4JJavaError":
-            return False
+            return None
         raise
 
 
-def read_stage(spark: SparkSession, warehouse: str, stage: str) -> DataFrame:
-    return spark.read.parquet(stage_path(warehouse, stage))
+def stage_complete(warehouse: str, stage: str,
+                   spark: SparkSession | None = None) -> bool:
+    """Complete = the manifest exists AND parses as JSON."""
+    return _read_manifest(warehouse, stage, spark) is not None
+
+
+def read_stage(spark: SparkSession, warehouse: str, stage: str,
+               schema: StructType | None = None) -> DataFrame:
+    """The stage table; with ``schema`` the read skips parquet's
+    schema-inference job."""
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(stage_path(warehouse, stage))
+
+
+def _manifest_schema(manifest: dict) -> StructType | None:
+    """The schema a manifest records, or None when it does not parse
+    back to the same text (a truncated or unparseable simpleString)."""
+    text = manifest.get("schema")
+    try:
+        schema = _parse_datatype_string(text)
+    except Exception:  # noqa: BLE001 — parse errors surface from the JVM
+        return None
+    if not isinstance(schema, StructType) or schema.simpleString() != text:
+        return None
+    return schema
 
 
 def ensure_stage(spark: SparkSession, warehouse: str, stage: str, compute,
                  partition_by: list[str] | None = None,
                  lineage: dict | None = None) -> DataFrame:
     """Resume point: reuse the stage table when its manifest exists,
-    else compute + persist it."""
-    if not stage_complete(warehouse, stage, spark):
-        write_stage(compute(), warehouse, stage, partition_by, lineage)
-    return read_stage(spark, warehouse, stage)
+    else compute + persist it. The table is read with the schema it
+    was written with (the manifest's, on resume), so the read runs no
+    schema-inference job; a manifest whose schema does not parse is
+    read with inference."""
+    manifest = _read_manifest(warehouse, stage, spark)
+    if manifest is None:
+        df = compute()
+        write_stage(df, warehouse, stage, partition_by, lineage)
+        schema = df.schema
+    else:
+        schema = _manifest_schema(manifest)
+    return read_stage(spark, warehouse, stage, schema)
 
 
 def write_label_map(path: str, mapping: dict[str, int]) -> None:

@@ -22,6 +22,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
+from deepref_spark.session import local_frame
+
 
 def funnel(events: DataFrame, steps: list, ts_col: str = "ts",
            user_col: str = "user_id", type_col: str = "event_type") -> DataFrame:
@@ -1603,8 +1605,8 @@ def acf_profile(events: DataFrame, lags: tuple = ACF_LAGS) -> DataFrame:
         .select("h", F.coalesce("x", F.lit(0)).cast("long").alias("x"))
         .localCheckpoint(eager=False)  # feeds both sides of every lag join
     )
-    lagdf = events.sparkSession.createDataFrame(
-        [(int(l),) for l in lags], "lag int")
+    lagdf = local_frame(events.sparkSession, [(int(l),) for l in lags],
+                        "lag int")
     pairs = (
         lagdf.crossJoin(spine)
         .withColumn("h2", F.col("h") + F.col("lag"))

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, Window
 
 from deepref_spark import portable
 from deepref_spark.operators.linking import driver_rows
+from deepref_spark.session import local_frame
 
 # one pagerank point = 1e-9: BIGINT headroom is ~9.2e18 units, so the
 # grid supports total graph mass up to ~9.2e9 full points. At a
@@ -106,7 +107,6 @@ def pagerank(edges: DataFrame, iters: int = 3) -> DataFrame:
     # below stays the at-scale path.
     rows = driver_rows(edges.select("src", "dst"))
     if rows is not None:
-        import pandas as pd
         import pyspark.sql.types as T
 
         outd: dict = {}
@@ -128,9 +128,8 @@ def pagerank(edges: DataFrame, iters: int = 3) -> DataFrame:
             T.StructField("entity", node_t, False),
             T.StructField("pagerank", T.DoubleType(), False),
         ])
-        return edges.sparkSession.createDataFrame(
-            pd.DataFrame([(n, u[n] / float(UNIT)) for n in nodes_s],
-                         columns=["entity", "pagerank"]), schema=schema)
+        return local_frame(edges.sparkSession,
+                           [(n, u[n] / float(UNIT)) for n in nodes_s], schema)
     nodes = (
         edges.select(F.col("src").alias("entity"))
         .union(edges.select(F.col("dst").alias("entity")))
@@ -320,7 +319,6 @@ def kcore(edges: DataFrame, k: int = 2, max_rounds: int = 16) -> DataFrame:
     # the distributed round loop below stays the at-scale path.
     rows = driver_rows(edges.select("src", "dst"))
     if rows is not None:
-        import pandas as pd
         import pyspark.sql.types as T
 
         und = {(min(a, b), max(a, b)) for a, b in rows}
@@ -336,10 +334,8 @@ def kcore(edges: DataFrame, k: int = 2, max_rounds: int = 16) -> DataFrame:
                     T.StructField("entity", node_t, False),
                     T.StructField("core_deg", T.LongType(), False),
                 ])
-                return edges.sparkSession.createDataFrame(
-                    pd.DataFrame(sorted(deg.items()),
-                                 columns=["entity", "core_deg"]),
-                    schema=schema)
+                return local_frame(edges.sparkSession, sorted(deg.items()),
+                                   schema)
             und = {(a, b) for a, b in und if a not in bad and b not in bad}
         raise RuntimeError(
             f"kcore(k={k}) did not converge in {max_rounds} rounds")
@@ -428,7 +424,6 @@ def multihop(edges: DataFrame, max_hops: int = 3) -> DataFrame:
     # stay the at-scale path.
     rows = driver_rows(edges.select("src", "dst"))
     if rows is not None:
-        import pandas as pd
         import pyspark.sql.types as T
 
         adj: dict = {}
@@ -459,10 +454,7 @@ def multihop(edges: DataFrame, max_hops: int = 3) -> DataFrame:
             T.StructField("n_paths", T.LongType(), False),
         ])
         out_rows = [(a, b, mh, np) for (a, b), (mh, np) in agg.items()]
-        return edges.sparkSession.createDataFrame(
-            pd.DataFrame(out_rows,
-                         columns=["src", "dst", "min_hops", "n_paths"]),
-            schema=schema)
+        return local_frame(edges.sparkSession, out_rows, schema)
     hop = edges.select(
         "src", "dst", F.lit(1).cast("long").alias("n_paths")
     ).localCheckpoint(eager=False)
@@ -541,7 +533,6 @@ def triangle_counts(edges: DataFrame) -> DataFrame:
     # collected rows under the driver cap; distributed below at scale.
     rows = driver_rows(edges.select("src", "dst"))
     if rows is not None:
-        import pandas as pd
         import pyspark.sql.types as T
 
         und_s = {(min(a, b), max(a, b)) for a, b in rows}
@@ -580,10 +571,7 @@ def triangle_counts(edges: DataFrame) -> DataFrame:
             c = (_round6_spark((2.0 * t) / (d * (d - 1.0)))
                  if d >= 2 else 0.0)
             out_rows.append((v, d, t, c))
-        return edges.sparkSession.createDataFrame(
-            pd.DataFrame(out_rows, columns=["entity", "und_degree",
-                                            "n_triangles", "clustering"]),
-            schema=schema)
+        return local_frame(edges.sparkSession, out_rows, schema)
     und = (
         edges.select(F.least("src", "dst").alias("a"),
                      F.greatest("src", "dst").alias("b"))
@@ -783,7 +771,6 @@ def label_prop(edges: DataFrame, iters: int = 2,
     # the at-scale path.
     rows = driver_rows(und.select("src", "dst"))
     if rows is not None:
-        import pandas as pd
         import pyspark.sql.types as T
 
         nbrs: dict = {}
@@ -808,10 +795,7 @@ def label_prop(edges: DataFrame, iters: int = 2,
             T.StructField("entity", node_t, False),
             T.StructField("community", node_t, False),
         ])
-        return und.sparkSession.createDataFrame(
-            pd.DataFrame(sorted(lbl.items()),
-                         columns=["entity", "community"]),
-            schema=schema)
+        return local_frame(und.sparkSession, sorted(lbl.items()), schema)
     labels = (
         und.select(F.col("src").alias("v")).distinct()
         .withColumn("lbl", F.col("v"))
@@ -856,7 +840,6 @@ def hits(edges: DataFrame, iters: int = 2) -> DataFrame:
     # distributed loop below stays the at-scale path.
     rows = driver_rows(edges.select("src", "dst"))
     if rows is not None:
-        import pandas as pd
         import pyspark.sql.types as T
 
         nodes_s: set = set()
@@ -889,9 +872,7 @@ def hits(edges: DataFrame, iters: int = 2) -> DataFrame:
         out_rows = [(n, _round6_spark(auth_m[n] / float(UNIT)),
                      _round6_spark(hub_m[n] / float(UNIT)))
                     for n in nodes_s]
-        return edges.sparkSession.createDataFrame(
-            pd.DataFrame(out_rows, columns=["entity", "authority", "hub"]),
-            schema=schema)
+        return local_frame(edges.sparkSession, out_rows, schema)
     nodes = (
         edges.select(F.col("src").alias("entity"))
         .union(edges.select(F.col("dst").alias("entity")))
@@ -1034,7 +1015,6 @@ def community_quality(edges: DataFrame, labels: DataFrame,
     # exact (gate in _driver_community_tally).
     tally = _driver_community_tally(und, labels)
     if tally is not None:
-        import pandas as pd
         import pyspark.sql.types as T
 
         n_nodes_m, vol, internal, tv = tally
@@ -1054,11 +1034,7 @@ def community_quality(edges: DataFrame, labels: DataFrame,
             T.StructField("cut", T.LongType(), False),
             T.StructField("conductance_ppm", T.LongType(), False),
         ])
-        return und.sparkSession.createDataFrame(
-            pd.DataFrame(out_rows, columns=[
-                "community", "n_nodes", "vol", "internal_edges",
-                "cut", "conductance_ppm"]),
-            schema=schema)
+        return local_frame(und.sparkSession, out_rows, schema)
     lab_s = labels.select(F.col("entity").alias("src"), F.col("community").alias("c_src"))
     lab_d = labels.select(F.col("entity").alias("dst"), F.col("community").alias("c_dst"))
     tagged = und.join(lab_s, "src").join(lab_d, "dst")
@@ -1106,7 +1082,6 @@ def personalized_pagerank(edges: DataFrame, n_seeds: int = 3,
     # pagerank, seeds included (top-degree selection is deterministic)
     rows = driver_rows(edges.select("src", "dst"))
     if rows is not None:
-        import pandas as pd
         import pyspark.sql.types as T
 
         outd: dict = {}
@@ -1139,9 +1114,7 @@ def personalized_pagerank(edges: DataFrame, n_seeds: int = 3,
         ])
         out_rows = [(n, 1 if n in seeds else 0, u[n] / float(UNIT))
                     for n in nodes_s if u[n] > 0]
-        return edges.sparkSession.createDataFrame(
-            pd.DataFrame(out_rows, columns=["entity", "is_seed", "ppr"]),
-            schema=schema)
+        return local_frame(edges.sparkSession, out_rows, schema)
     nodes = (
         edges.select(F.col("src").alias("entity"))
         .union(edges.select(F.col("dst").alias("entity")))
@@ -1260,7 +1233,6 @@ def wl_refine(edges: DataFrame, iters: int = 2) -> DataFrame:
     if rows is not None:
         import hashlib
 
-        import pandas as pd
         import pyspark.sql.types as T
 
         from deepref_spark.refsem import md5_mod_py
@@ -1298,11 +1270,9 @@ def wl_refine(edges: DataFrame, iters: int = 2) -> DataFrame:
             T.StructField("n_entities", T.LongType(), False),
             T.StructField("exemplar", node_t, False),
         ])
-        return und.sparkSession.createDataFrame(
-            pd.DataFrame(
-                [(c, n, ex) for c, (n, ex) in sorted(agg.items())],
-                columns=["wl_color", "n_entities", "exemplar"]),
-            schema=schema)
+        return local_frame(
+            und.sparkSession,
+            [(c, n, ex) for c, (n, ex) in sorted(agg.items())], schema)
     colors = (
         und.groupBy(F.col("src").alias("v"))
         .agg(F.count(F.lit(1)).cast("long").alias("d"))
@@ -1442,7 +1412,6 @@ def ktruss(edges: DataFrame, k: int = 3, max_rounds: int = 8) -> DataFrame:
     # distributed peel below (which stays the at-scale path).
     rows = driver_rows(edges.select("src", "dst"))
     if rows is not None:
-        import pandas as pd
         import pyspark.sql.types as T
 
         es = {(a, b) if a < b else (b, a) for a, b in rows if a != b}
@@ -1460,11 +1429,9 @@ def ktruss(edges: DataFrame, k: int = 3, max_rounds: int = 8) -> DataFrame:
                     T.StructField("e2", node_t, False),
                     T.StructField("support", T.LongType(), False),
                 ])
-                return edges.sparkSession.createDataFrame(
-                    pd.DataFrame(
-                        [(a, b, s) for (a, b), s in sorted(sup.items())],
-                        columns=["e1", "e2", "support"]),
-                    schema=schema)
+                return local_frame(
+                    edges.sparkSession,
+                    [(a, b, s) for (a, b), s in sorted(sup.items())], schema)
             for a, b in dropped:
                 es.discard((a, b))
                 adj[a].discard(b)
@@ -1587,7 +1554,6 @@ def bfs_distances(edges: DataFrame, n_seeds: int = 3,
     # the driver cap; the frontier loop below stays the at-scale path.
     rows = driver_rows(edges.select("src", "dst"))
     if rows is not None:
-        import pandas as pd
         import pyspark.sql.types as T
 
         adj, seed_key = _und_maps(rows)
@@ -1609,9 +1575,7 @@ def bfs_distances(edges: DataFrame, n_seeds: int = 3,
             T.StructField("entity", node_t, False),
             T.StructField("dist", T.IntegerType(), False),
         ])
-        return edges.sparkSession.createDataFrame(
-            pd.DataFrame(sorted(dist.items()), columns=["entity", "dist"]),
-            schema=schema)
+        return local_frame(edges.sparkSession, sorted(dist.items()), schema)
     sym = _und_adj(
         edges.select(F.least("src", "dst").alias("a"),
                      F.greatest("src", "dst").alias("b"))
@@ -1747,7 +1711,6 @@ def anf_hyperball(edges: DataFrame, m: int = 16, hops: int = 2) -> DataFrame:
     if rows is not None:
         import hashlib
 
-        import pandas as pd
         import pyspark.sql.types as T
 
         from deepref_spark.refsem import md5_mod_py
@@ -1796,11 +1759,7 @@ def anf_hyperball(edges: DataFrame, m: int = 16, hops: int = 2) -> DataFrame:
             T.StructField("n_regs", T.LongType(), False),
             T.StructField("anf_estimate", T.DoubleType(), False),
         ])
-        return edges.sparkSession.createDataFrame(
-            pd.DataFrame(sorted(out_rows),
-                         columns=["entity", "ball_exact", "n_regs",
-                                  "anf_estimate"]),
-            schema=schema)
+        return local_frame(edges.sparkSession, sorted(out_rows), schema)
     und = (
         edges.select(F.least("src", "dst").alias("a"),
                      F.greatest("src", "dst").alias("b"))
@@ -1926,7 +1885,6 @@ def taxonomy_closure(parent_edges: DataFrame,
     # the semi-naive distributed loop stays the fallback.
     collected = driver_rows(base)
     if collected is not None:
-        import pandas as pd
         import pyspark.sql.types as T
 
         parent_adj: dict = {}
@@ -1947,10 +1905,7 @@ def taxonomy_closure(parent_edges: DataFrame,
                     T.StructField("anc", node_t, False),
                     T.StructField("depth", T.IntegerType(), False),
                 ])
-                return parent_edges.sparkSession.createDataFrame(
-                    pd.DataFrame(acc_rows,
-                                 columns=["child", "anc", "depth"]),
-                    schema=schema)
+                return local_frame(parent_edges.sparkSession, acc_rows, schema)
             acc_rows.extend(delta_rows)
         raise RuntimeError(
             f"taxonomy_closure did not converge in {max_rounds} rounds")
@@ -2073,7 +2028,6 @@ def scc(edges: DataFrame, max_outer: int = 24,
     if collected is not None:
         if not collected:
             raise ValueError("scc: empty edge set")
-        import pandas as pd
         import pyspark.sql.types as T
 
         rows = []
@@ -2087,9 +2041,7 @@ def scc(edges: DataFrame, max_outer: int = 24,
             T.StructField("scc_id", node_t, False),
             T.StructField("scc_size", T.LongType(), False),
         ])
-        return edges.sparkSession.createDataFrame(
-            pd.DataFrame(rows, columns=["entity", "scc_id", "scc_size"]),
-            schema=schema)
+        return local_frame(edges.sparkSession, rows, schema)
     remaining = (E0.select(F.col("src").alias("v"))
                  .union(E0.select(F.col("dst").alias("v")))
                  .distinct().localCheckpoint())
@@ -2214,7 +2166,6 @@ def harmonic_centrality(edges: DataFrame, n_seeds: int = 3,
     # the at-scale path.
     rows = driver_rows(edges.select("src", "dst"))
     if rows is not None:
-        import pandas as pd
         import pyspark.sql.types as T
 
         adj, seed_key = _und_maps(rows)
@@ -2247,10 +2198,7 @@ def harmonic_centrality(edges: DataFrame, n_seeds: int = 3,
         ])
         out_rows = [(v, n, h, h / float(grid))
                     for v, (n, h) in sorted(acc.items())]
-        return edges.sparkSession.createDataFrame(
-            pd.DataFrame(out_rows, columns=["entity", "n_seeds_reached",
-                                            "h_units", "harmonic"]),
-            schema=schema)
+        return local_frame(edges.sparkSession, out_rows, schema)
     sym = _und_adj(
         edges.select(F.least("src", "dst").alias("a"),
                      F.greatest("src", "dst").alias("b"))
@@ -2321,15 +2269,15 @@ def scc_condensation(edges: DataFrame, labels: DataFrame | None = None,
     comps = lab.groupBy("scc_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_members"))
     # size-adaptive (round 6): the quotient is orders of magnitude
-    # smaller than the corpus; under the driver cap the longest-path
-    # levels and in/out degrees come from one collected pass instead
-    # of rounds x 3 jobs of relaxation. Distributed relaxation below
-    # stays the at-scale fallback.
+    # smaller than the corpus; under the driver cap (quotient edges and
+    # components both) the longest-path levels and in/out degrees come
+    # from one collected pass instead of rounds x 3 jobs of relaxation.
+    # Distributed relaxation below stays the at-scale fallback.
     q = driver_rows(ced)
-    if q is not None:
+    cs = driver_rows(comps) if q is not None else None
+    if cs is not None:
         from collections import deque
 
-        import pandas as pd
         import pyspark.sql.types as T
 
         adj: dict = {}
@@ -2358,31 +2306,18 @@ def scc_condensation(edges: DataFrame, labels: DataFrame | None = None,
             raise RuntimeError(
                 "scc_condensation levels did not converge "
                 "(cycle in the quotient graph?)")
-        node_t = ced.schema["a"].dataType
-        qschema = T.StructType([
-            T.StructField("scc_id", node_t, False),
+        schema = T.StructType([
+            T.StructField("scc_id", comps.schema["scc_id"].dataType, False),
+            T.StructField("n_members", T.LongType(), False),
             T.StructField("out_edges", T.LongType(), False),
             T.StructField("in_edges", T.LongType(), False),
             T.StructField("topo_level", T.IntegerType(), False),
         ])
-        qdf = edges.sparkSession.createDataFrame(
-            pd.DataFrame(
-                [(v, outc.get(v, 0), inc.get(v, 0), lev_map[v])
-                 for v in lev_map],
-                columns=["scc_id", "out_edges", "in_edges", "topo_level"]),
-            schema=qschema)
-        return (
-            comps.join(F.broadcast(qdf), "scc_id", "left")
-            .select(
-                "scc_id", "n_members",
-                F.coalesce("out_edges", F.lit(0)).cast("long")
-                .alias("out_edges"),
-                F.coalesce("in_edges", F.lit(0)).cast("long")
-                .alias("in_edges"),
-                F.coalesce("topo_level", F.lit(0)).cast("int")
-                .alias("topo_level"),
-            )
-        )
+        return local_frame(
+            edges.sparkSession,
+            [(v, n, outc.get(v, 0), inc.get(v, 0), lev_map.get(v, 0))
+             for v, n in cs],
+            schema)
     lev = comps.select(F.col("scc_id").alias("v"),
                        F.lit(0).alias("level")).localCheckpoint()
     for _ in range(max_rounds):
@@ -2609,7 +2544,6 @@ def modularity_profile(edges: DataFrame, labels: DataFrame,
     # that single source of truth).
     tally = _driver_community_tally(und, labels)
     if tally is not None:
-        import pandas as pd
         import pyspark.sql.types as T
 
         n_nodes_m, vol, internal, tv = tally
@@ -2636,11 +2570,7 @@ def modularity_profile(edges: DataFrame, labels: DataFrame,
             T.StructField("vol", T.LongType(), False),
             T.StructField("modularity_ppm", T.LongType(), False),
         ])
-        return und.sparkSession.createDataFrame(
-            pd.DataFrame(out_rows, columns=[
-                "community", "n_nodes", "internal_edges", "vol",
-                "modularity_ppm"]),
-            schema=schema)
+        return local_frame(und.sparkSession, out_rows, schema)
     lab_s = labels.select(F.col("entity").alias("src"),
                           F.col("community").alias("c_src"))
     lab_d = labels.select(F.col("entity").alias("dst"),
@@ -2709,7 +2639,6 @@ def weighted_sssp(edges: DataFrame, n_seeds: int = 2,
     if rows is not None:
         import hashlib
 
-        import pandas as pd
         import pyspark.sql.types as T
 
         from deepref_spark.refsem import md5_mod_py
@@ -2734,9 +2663,7 @@ def weighted_sssp(edges: DataFrame, n_seeds: int = 2,
             T.StructField("entity", node_t, False),
             T.StructField("dist", T.LongType(), False),
         ])
-        return edges.sparkSession.createDataFrame(
-            pd.DataFrame(sorted(dist.items()), columns=["entity", "dist"]),
-            schema=schema)
+        return local_frame(edges.sparkSession, sorted(dist.items()), schema)
     ew = (
         edges.select("src", "dst").where(F.col("src") != F.col("dst"))
         .distinct()
@@ -2799,7 +2726,6 @@ def katz_centrality(edges: DataFrame, max_hops: int = 4,
     # under the driver cap; distributed below at scale.
     rows = driver_rows(edges.select("src", "dst"))
     if rows is not None:
-        import pandas as pd
         import pyspark.sql.types as T
 
         adj_m, _ = _und_maps(rows)
@@ -2824,10 +2750,7 @@ def katz_centrality(edges: DataFrame, max_hops: int = 4,
             T.StructField("katz_units", T.LongType(), False),
         ])
         out_rows = [(v, w_m[v], acc_m[v]) for v in sorted(adj_m)]
-        return edges.sparkSession.createDataFrame(
-            pd.DataFrame(out_rows,
-                         columns=["entity", "walks_out", "katz_units"]),
-            schema=schema)
+        return local_frame(edges.sparkSession, out_rows, schema)
     sym = _und_adj(
         edges.select(F.least("src", "dst").alias("a"),
                      F.greatest("src", "dst").alias("b"))
@@ -2895,7 +2818,6 @@ def stress_centrality(edges: DataFrame, n_seeds: int = 4,
     # at-scale path.
     rows = driver_rows(edges.select("src", "dst"))
     if rows is not None:
-        import pandas as pd
         import pyspark.sql.types as T
 
         adj, seed_key = _und_maps(rows)
@@ -2939,9 +2861,7 @@ def stress_centrality(edges: DataFrame, n_seeds: int = 4,
             T.StructField("stress", T.LongType(), False),
         ])
         out_rows = [(v, n, st) for v, (n, st) in sorted(agg.items())]
-        return edges.sparkSession.createDataFrame(
-            pd.DataFrame(out_rows, columns=["entity", "n_pairs", "stress"]),
-            schema=schema)
+        return local_frame(edges.sparkSession, out_rows, schema)
     sym = _und_adj(
         edges.select(F.least("src", "dst").alias("a"),
                      F.greatest("src", "dst").alias("b"))
@@ -3119,8 +3039,7 @@ def rich_club(edges: DataFrame,
         .where(F.col("dmin") > F.col("k"))
         .groupBy("k").agg(F.count(F.lit(1)).cast("long").alias("e_club"))
     )
-    base = edges.sparkSession.createDataFrame(
-        [(int(k),) for k in ladder], "k int")
+    base = local_frame(edges.sparkSession, [(int(k),) for k in ladder], "k int")
     return (
         base.join(node_k, "k", "left").join(edge_k, "k", "left")
         .select(
@@ -3248,7 +3167,8 @@ def bowtie_regions(edges: DataFrame, labels: DataFrame | None = None,
     frontier expansion below does O(|quotient closure|) total join
     work in rounds = DAG depth, each from a localCheckpoint'ed
     frontier. The one driver-side collect is the single core-id row;
-    per-round actions are scalar counts. Raises rather than
+    per-round actions are scalar counts (under the driver cap the whole
+    readout runs on collected rows instead). Raises rather than
     truncating if ``max_rounds`` is exceeded.
 
     Output: (region, n_components, n_entities) — at most four rows.
@@ -3267,30 +3187,26 @@ def bowtie_regions(edges: DataFrame, labels: DataFrame | None = None,
     comps = (lab.groupBy("scc_id")
              .agg(F.count(F.lit(1)).cast("long").alias("n_members"))
              .localCheckpoint())
-    core_rows = (comps.orderBy(F.col("n_members").desc(),
-                               F.col("scc_id"))
-                 .select("scc_id").limit(1).collect())
-    if not core_rows:
-        raise ValueError("bowtie_regions: empty edge set has no core")
-    core = core_rows[0][0]
     spark = edges.sparkSession
 
-    # size-adaptive (round 6): under the driver cap both reachability
-    # closures are one collected BFS each instead of rounds x 3 jobs
-    # of semi-naive frontier expansion; the distributed loop below is
-    # the at-scale fallback.
+    # size-adaptive (round 6): under the driver cap (quotient edges and
+    # components both) the core pick and both reachability closures
+    # run on the collected rows, one BFS each, instead of rounds x 3
+    # jobs of semi-naive frontier expansion; the distributed loop
+    # below is the at-scale fallback.
     q = driver_rows(ced)
-    if q is not None:
-        import pandas as pd
-        import pyspark.sql.types as T
-
+    cs = driver_rows(comps) if q is not None else None
+    if cs is not None:
+        if not cs:
+            raise ValueError("bowtie_regions: empty edge set has no core")
+        core = min(cs, key=lambda r: (-r[1], r[0]))[0]
         fwd: dict = {}
         bwd: dict = {}
         for a, b in q:
             fwd.setdefault(a, []).append(b)
             bwd.setdefault(b, []).append(a)
 
-        def _bfs(adj: dict) -> list:
+        def _bfs(adj: dict) -> set:
             seen = {core}
             frontier = [core]
             while frontier:
@@ -3301,32 +3217,24 @@ def bowtie_regions(edges: DataFrame, labels: DataFrame | None = None,
                             seen.add(w)
                             nxt.append(w)
                 frontier = nxt
-            return sorted(seen)
+            return seen
 
-        node_t = ced.schema["a"].dataType
-        vschema = T.StructType([T.StructField("v", node_t, False)])
-        outset = spark.createDataFrame(
-            pd.DataFrame(_bfs(fwd), columns=["v"]), schema=vschema)
-        inset = spark.createDataFrame(
-            pd.DataFrame(_bfs(bwd), columns=["v"]), schema=vschema)
-        return (
-            comps
-            .join(F.broadcast(inset.select(F.col("v").alias("scc_id"),
-                                           F.lit(1).alias("in_f"))),
-                  "scc_id", "left")
-            .join(F.broadcast(outset.select(F.col("v").alias("scc_id"),
-                                            F.lit(1).alias("out_f"))),
-                  "scc_id", "left")
-            .select(
-                F.when(F.col("scc_id") == F.lit(core), "core")
-                .when(F.col("in_f") == 1, "in")
-                .when(F.col("out_f") == 1, "out")
-                .otherwise("other").alias("region"),
-                "n_members")
-            .groupBy("region")
-            .agg(F.count(F.lit(1)).cast("long").alias("n_components"),
-                 F.sum("n_members").cast("long").alias("n_entities"))
-        )
+        inset, outset = _bfs(bwd), _bfs(fwd)
+        regions: dict = {}
+        for v, n in cs:
+            r = ("core" if v == core else "in" if v in inset
+                 else "out" if v in outset else "other")
+            nc, ne = regions.get(r, (0, 0))
+            regions[r] = (nc + 1, ne + n)
+        return local_frame(
+            spark, [(r, nc, ne) for r, (nc, ne) in regions.items()],
+            "region string, n_components long, n_entities long")
+    core_rows = (comps.orderBy(F.col("n_members").desc(),
+                               F.col("scc_id"))
+                 .select("scc_id").limit(1).collect())
+    if not core_rows:
+        raise ValueError("bowtie_regions: empty edge set has no core")
+    core = core_rows[0][0]
 
     def _closure(quot: DataFrame) -> DataFrame:
         # semi-naive forward closure from the core over quotient edges

@@ -19,7 +19,12 @@ Both CC and the whole map are size-adaptive under the one driver gate
 (``driver_rows``): ``connected_components`` solves an edge set under
 the cap with driver union-find, and ``canonical_map`` computes stages
 1-5 on the driver when the distinct names and their blocks' candidate
-pairs fit the cap.
+pairs fit the cap. Every driver twin here hands its rows back through
+``session.local_frame``: a LocalRelation whose exact size the planner
+sees, so a map of a few thousand names is broadcast as it is and
+reading it starts no Python worker. ``canonical_map``'s distributed
+branch returns a lazy local checkpoint instead, so its callers read
+the LSH and CC plan once.
 
 Skew: the hot-entity head of the distribution makes the joins of the
 map back onto the triples skewed; ``pipeline.triples_from_scored``
@@ -39,6 +44,7 @@ from pyspark.sql.types import StringType, StructField, StructType
 
 from deepref_spark.portable import md5_mod
 from deepref_spark.refsem import md5_mod_py
+from deepref_spark.session import local_frame
 
 N_BANDS = 4
 NGRAM = 3
@@ -205,7 +211,7 @@ def connected_components(edges: DataFrame, max_iter: int = 20) -> DataFrame:
         node_t = edges.schema[0].dataType
         schema = StructType([StructField("entity", node_t, False),
                              StructField("component", node_t, False)])
-        return spark.createDataFrame(list(union_find(rows).items()), schema)
+        return local_frame(spark, list(union_find(rows).items()), schema)
 
     sym = edges.union(edges.select(F.col("b").alias("a"), F.col("a").alias("b")))
     labels = (
@@ -318,15 +324,18 @@ def canonical_map(entities: DataFrame, name_col: str = "entity",
     if rows is not None:
         canon = _driver_canonical([e for (e,) in rows], threshold, driver_max_rows(spark))
         if canon is not None:
-            return spark.createDataFrame(canon, "entity string, canonical string")
+            return local_frame(spark, canon, "entity string, canonical string")
     # signatures feed BOTH sides of the LSH self-join — stage them so
     # the shingle/minhash derivation runs once, not per join side
     sigs = minhash_signatures(ents).localCheckpoint(eager=False)
     edges = similarity_edges(candidate_pairs(sigs), threshold)
     comps = connected_components(edges)
+    # staged (lazily) so a caller's size count and join reads run the
+    # LSH and CC plan once; the driver map above needs no staging
     return (
         ents.join(comps, "entity", "left")
         .select("entity", F.coalesce("component", "entity").alias("canonical"))
+        .localCheckpoint(eager=False)
     )
 
 
@@ -540,7 +549,6 @@ def sorted_neighborhood_pairs(entities: DataFrame,
     spark = raw.sparkSession
     rows = driver_rows(raw)
     if rows is not None:
-        import pandas as pd
         import pyspark.sql.types as T
 
         names = sorted({r[0] for r in rows})
@@ -561,11 +569,10 @@ def sorted_neighborhood_pairs(entities: DataFrame,
             T.StructField("e2", node_t, False),
             T.StructField("n_passes", T.LongType(), False),
         ])
-        return spark.createDataFrame(
-            pd.DataFrame(
-                [(a, b, len(ps)) for (a, b), ps in sorted(pair_passes.items())],
-                columns=["e1", "e2", "n_passes"]),
-            schema=schema)
+        return local_frame(
+            spark,
+            [(a, b, len(ps)) for (a, b), ps in sorted(pair_passes.items())],
+            schema)
     ent = raw.distinct()
     passes = []
     for pass_id, key_expr in ((1, "entity"), (2, "reverse(entity)")):

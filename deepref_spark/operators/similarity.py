@@ -14,6 +14,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
+from deepref_spark.session import local_frame
+
 
 def _norm_col(vec: str) -> F.Column:
     return F.sqrt(F.expr(f"aggregate({vec}, CAST(0.0 AS DOUBLE), (acc, x) -> acc + CAST(x AS DOUBLE) * CAST(x AS DOUBLE))"))
@@ -1785,10 +1787,10 @@ def top_eigen(embeddings: DataFrame, iters: int = 8) -> DataFrame:
     rn = sum(tdiv(v[i], 1000) * w[i] for i in dims)
     rd = sum(tdiv(v[i], 1000) ** 2 for i in dims)
     trace = sum(C[d, d] for d in dims)
-    out = embeddings.sparkSession.createDataFrame(
+    out = local_frame(
+        embeddings.sparkSession,
         [(int(d), int(v[d]), int(rn), int(rd), int(trace)) for d in dims],
-        schema="dim long, component_micro long, rn long, rd long, "
-               "trace long")
+        "dim long, component_micro long, rn long, rd long, trace long")
     # rd = 0 only when the iterate degenerated to the zero vector
     # (v0 exactly orthogonal to the dominant eigenvector — measure-zero
     # on real data); pin the readout to 0.0 rather than inheriting

@@ -15,6 +15,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from deepref_spark import refsem
+from deepref_spark.session import local_frame
 
 
 def sk_table(spark: SparkSession, hypernyms: dict[str, str] | None = None) -> DataFrame:
@@ -26,7 +27,8 @@ def sk_table(spark: SparkSession, hypernyms: dict[str, str] | None = None) -> Da
     for entity in sorted(hyp):
         vec = refsem.sk_extract([entity, entity], hyp)["ses1"]
         rows.append((entity, vec[0], vec[1]))
-    return spark.createDataFrame(rows, "entity string, father string, grandpa string")
+    return local_frame(spark, rows,
+                       "entity string, father string, grandpa string")
 
 
 def attach_sk(mentions: DataFrame, sk: DataFrame) -> DataFrame:

@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, Window
 
 from deepref_spark import portable
 from deepref_spark.portable import SPARK
+from deepref_spark.session import local_frame
 
 # language-ID lexicons: tiny per-language function-word sets; the n-gram
 # heuristic scores by function-word hit ratio.
@@ -545,7 +546,7 @@ def contamination_screen(documents: DataFrame, benchmark_texts,
             F.expr(grams).alias("gh"),
         )
         spark = documents.sparkSession
-        keys_df = spark.createDataFrame([(int(k),) for k in keys], "k long")
+        keys_df = local_frame(spark, [(int(k),) for k in keys], "k long")
         hits = (
             base.select("doc_id", F.explode("gh").alias("h"))
             .join(F.broadcast(keys_df), F.col("h").cast("long") == F.col("k"))
@@ -607,7 +608,7 @@ def contaminated_coverage(documents: DataFrame, benchmark_texts,
             f"ELSE array() END"
         )
         spark = documents.sparkSession
-        keys_df = spark.createDataFrame([(int(k),) for k in keys], "k long")
+        keys_df = local_frame(spark, [(int(k),) for k in keys], "k long")
         pre = staged.select(
             "doc_id", F.expr("size(t)").cast("int").alias("n_tokens"),
             F.expr(grams).alias("gh"),
@@ -1475,7 +1476,7 @@ def bm25_topk(documents: DataFrame, queries=BM25_QUERIES,
         for t in sorted(set(portable.norm_tokens_py(text)))
     ]
     spark = documents.sparkSession
-    qt = F.broadcast(spark.createDataFrame(qterms, "query_id string, term string"))
+    qt = F.broadcast(local_frame(spark, qterms, "query_id string, term string"))
     staged = _tok_frame(documents)  # tokenize once for tf AND dl
     tf = (
         staged.select("doc_id", F.explode("t").alias("term"))

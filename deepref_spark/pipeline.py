@@ -108,12 +108,11 @@ def triples_from_scored(scored: DataFrame, canonicalize: bool = True,
             .union(triples.select(F.col("obj").alias("entity")))
             .distinct()
         )
-        # lazy local checkpoint, not cache(): size_gated_broadcast's
-        # count() materializes it, both joins read it, and the
-        # ContextCleaner frees it once the plan is dropped. No caller
-        # could unpersist a cache() of it, so each call would leave a
-        # CacheManager entry for the session's life.
-        canon = linking.canonical_map(ents).localCheckpoint(eager=False)
+        # the map is a LocalRelation when solved on the driver and a lazy
+        # local checkpoint otherwise (linking.canonical_map), so the
+        # size count and both joins read it without re-running the
+        # linking plan, and no cache() entry outlives the call
+        canon = linking.canonical_map(ents)
         # broadcast only when the entity map is provably small — at
         # 10^12 docs the distinct-entity table is not broadcast-sized
         # and the gate falls back to a shuffle join (AQE skew-handled)

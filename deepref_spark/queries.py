@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from deepref_spark import portable, refsem
 from deepref_spark.portable import DUCK, SPARK, md5_mod, md5_unit
 from deepref_spark.schemas import load_table
+from deepref_spark.session import local_frame
 
 MIN_T = portable.MIN_TOKENS
 
@@ -1949,7 +1950,7 @@ def kg_wordpiece_basic(spark, sf_dir):
         portable_mentions(spark, sf_dir)
         .select(F.explode("tokens").alias("word"))
     )
-    adv = spark.createDataFrame([(w,) for w in _WPB_ADV_WORDS], "word string")
+    adv = local_frame(spark, [(w,) for w in _WPB_ADV_WORDS], "word string")
     return wordpiece_basic_words(words.unionAll(adv).distinct())
 
 
@@ -2646,9 +2647,8 @@ def emb_near_dups(spark, sf_dir):
     from deepref_spark.operators.similarity import embedding_near_dups
 
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    planted = spark.createDataFrame(
-        _planted_near_dup_rows(), schema="vec_id long, embedding array<float>"
-    )
+    planted = local_frame(spark, _planted_near_dup_rows(),
+                          "vec_id long, embedding array<float>")
     return embedding_near_dups(emb.unionAll(planted), threshold=0.95, n_planes=6)
 
 
@@ -2685,9 +2685,8 @@ def emb_semdedup(spark, sf_dir):
     from deepref_spark.operators.similarity import semdedup
 
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    planted = spark.createDataFrame(
-        _planted_near_dup_rows(), schema="vec_id long, embedding array<float>"
-    )
+    planted = local_frame(spark, _planted_near_dup_rows(),
+                          "vec_id long, embedding array<float>")
     return semdedup(emb.unionAll(planted), n_lists=16, threshold=0.95)
 
 
@@ -4094,9 +4093,7 @@ def text_c4_filters(spark, sf_dir):
     reconstruction, sentence count, and the page-level drop flags."""
     from deepref_spark.operators.text_analysis import c4_filters
 
-    planted = spark.createDataFrame(
-        _planted_c4_rows(), schema="doc_id long, text string"
-    )
+    planted = local_frame(spark, _planted_c4_rows(), "doc_id long, text string")
     docs = documents(spark, sf_dir).select("doc_id", "text")
     return c4_filters(docs.unionAll(planted))
 
@@ -4108,9 +4105,7 @@ def text_pii_mask(spark, sf_dir):
     the raw text plus the sequentially-masked text."""
     from deepref_spark.operators.text_analysis import pii_mask
 
-    planted = spark.createDataFrame(
-        _planted_pii_rows(), schema="doc_id long, text string"
-    )
+    planted = local_frame(spark, _planted_pii_rows(), "doc_id long, text string")
     docs = documents(spark, sf_dir).select("doc_id", "text")
     return pii_mask(docs.unionAll(planted))
 
@@ -8220,8 +8215,7 @@ def text_boilerplate(spark, sf_dir):
     path together."""
     from deepref_spark.operators.dedup import boilerplate_stats
 
-    planted = spark.createDataFrame(
-        _BOILER_DOCS, schema="doc_id long, text string")
+    planted = local_frame(spark, _BOILER_DOCS, "doc_id long, text string")
     docs = documents(spark, sf_dir).select("doc_id", "text") \
         .unionAll(planted)
     return boilerplate_stats(docs, min_words=4, df_threshold=3)
@@ -8357,8 +8351,7 @@ def kg_alias_dict(spark, sf_dir):
     fan-in of one entity, never the corpus."""
     m = portable_mentions(spark, sf_dir)
     preds = m.where(F.expr(f"{_pred_expr()} <> 'Other'"))
-    planted = spark.createDataFrame(
-        [(s,) for s in _ALIAS_PLANT], schema="entity string")
+    planted = local_frame(spark, [(s,) for s in _ALIAS_PLANT], "entity string")
     ents = (preds.select(F.col("h_name").alias("entity"))
             .union(preds.select(F.col("t_name").alias("entity")))
             .union(planted)
@@ -9531,8 +9524,7 @@ def kg_fellegi_sunter(spark, sf_dir):
 
     m = portable_mentions(spark, sf_dir)
     preds = m.where(F.expr(f"{_pred_expr()} <> 'Other'"))
-    planted = spark.createDataFrame(
-        [(s,) for s in _ALIAS_PLANT], schema="entity string")
+    planted = local_frame(spark, [(s,) for s in _ALIAS_PLANT], "entity string")
     ents = (preds.select(F.col("h_name").alias("entity"))
             .union(preds.select(F.col("t_name").alias("entity")))
             .union(planted)
@@ -9717,8 +9709,7 @@ def kg_canon_audit(spark, sf_dir):
     row at every SF."""
     m = portable_mentions(spark, sf_dir)
     preds = m.where(F.expr(f"{_pred_expr()} <> 'Other'"))
-    planted = spark.createDataFrame(
-        [(s,) for s in _ALIAS_PLANT], schema="entity string")
+    planted = local_frame(spark, [(s,) for s in _ALIAS_PLANT], "entity string")
     ents = (preds.select(F.col("h_name").alias("entity"))
             .union(preds.select(F.col("t_name").alias("entity")))
             .union(planted)
@@ -9832,8 +9823,7 @@ def kg_er_pipeline(spark, sf_dir):
 
     m = portable_mentions(spark, sf_dir)
     preds = m.where(F.expr(f"{_pred_expr()} <> 'Other'"))
-    planted = spark.createDataFrame(
-        [(s,) for s in _ALIAS_PLANT], schema="entity string")
+    planted = local_frame(spark, [(s,) for s in _ALIAS_PLANT], "entity string")
     ents = (preds.select(F.col("h_name").alias("entity"))
             .union(preds.select(F.col("t_name").alias("entity")))
             .union(planted)
@@ -11077,8 +11067,8 @@ def kg_distant_supervision(spark, sf_dir):
     from deepref_spark.operators.kgquality import distant_supervision
 
     m = portable_mentions(spark, sf_dir).select("doc_id", "h_name", "t_name")
-    plant = spark.createDataFrame(
-        _DS_PLANT, schema="doc_id long, h_name string, t_name string")
+    plant = local_frame(spark, _DS_PLANT,
+                        "doc_id long, h_name string, t_name string")
     staged = m.unionByName(plant).withColumn(
         "_hv", F.expr(md5_mod("concat(h_name, '|', t_name)", 997)))
     pairs = staged.select(
@@ -11130,8 +11120,8 @@ def kg_phonetic_blocking(spark, sf_dir):
 
     m = portable_mentions(spark, sf_dir)
     preds = m.where(F.expr(f"{_pred_expr()} <> 'Other'"))
-    planted = spark.createDataFrame(
-        [(s,) for s in _PHONETIC_PLANT], schema="entity string")
+    planted = local_frame(spark, [(s,) for s in _PHONETIC_PLANT],
+                          "entity string")
     surfaces = (preds.select(F.col("h_name").alias("entity"))
                 .union(preds.select(F.col("t_name").alias("entity")))
                 .union(planted))

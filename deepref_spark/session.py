@@ -11,7 +11,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 # One BLAS thread per task: Spark supplies the parallelism (one python
 # worker per core); multi-threaded BLAS inside each worker oversubscribes
@@ -88,3 +88,30 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
+    """``rows`` (tuples in ``schema``'s field order; ``schema`` a
+    StructType or a DDL string) as a DataFrame over a LocalRelation:
+    the one way driver-built rows enter a plan.
+
+    The rows become one Arrow table typed by ``schema`` and reach the
+    JVM as Arrow batches whether or not
+    ``spark.sql.execution.arrow.pyspark.enabled`` is set. The plan then
+    holds the rows themselves with their exact size: reading them runs
+    no job and no Python worker, and the planner may broadcast them.
+    Python tuples handed to ``createDataFrame`` would instead become a
+    pickled RDD that a Python worker re-serializes on every read and
+    whose size the planner takes as unknown. A NULL in a non-nullable
+    field raises ValueError."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType, _parse_datatype_string
+
+    if not isinstance(schema, StructType):
+        schema = _parse_datatype_string(schema)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow)
+    return spark.createDataFrame(table, schema)

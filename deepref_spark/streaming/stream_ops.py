@@ -20,6 +20,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
+from deepref_spark.session import local_frame
+
 
 def streaming_triple_dedup(scored_stream: DataFrame, watermark: str = "1 hour") -> DataFrame:
     """Streaming twin of pipeline.triples_from_scored's dedup: distinct
@@ -225,7 +227,7 @@ def kg_ingest_stream(docs_stream: DataFrame, snapshot_dir: str,
             existing = spark.read.parquet(snapshot_dir).select(
                 "subj_canon", "pred", "obj_canon", "n_docs", "max_score")
         except Exception:
-            existing = spark.createDataFrame([], GRAPH_SNAPSHOT_SCHEMA)
+            existing = local_frame(spark, [], GRAPH_SNAPSHOT_SCHEMA)
         merged = merge_triples(existing, incoming).localCheckpoint(eager=True)
         merged.write.mode("overwrite").parquet(snapshot_dir)
 
@@ -286,8 +288,8 @@ def hll_stream(events_stream: DataFrame, registers_dir: str,
             existing = spark.read.parquet(registers_dir).select(
                 "event_type", "bucket", "mr")
         except Exception:
-            existing = spark.createDataFrame(
-                [], "event_type string, bucket int, mr int")
+            existing = local_frame(
+                spark, [], "event_type string, bucket int, mr int")
         merged = (
             existing.unionByName(incoming)
             .groupBy("event_type", "bucket")

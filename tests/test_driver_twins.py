@@ -1,5 +1,6 @@
 """Every size-gated driver twin must be row-identical to the distributed
-path it short-cuts. Each TWINS entry runs once at the default
+path it short-cuts, and hand its rows back as a LocalRelation
+(``session.local_frame``). Each TWINS entry runs once at the default
 ``deepref.driver.max_rows`` (driver path at test scale) and once with
 it at 0 (distributed path); the full sorted row sets must match
 exactly, including the floor-division grids and round(…, 6) semantics.
@@ -7,6 +8,9 @@ The table runs on the sf0.001 graph and on small adversarial graphs:
 NULL entities/communities, labels disjoint from the edges, duplicate
 entities and edges, self-loops, and a vocabulary of awkward names."""
 
+import ast
+import math
+from pathlib import Path
 from types import SimpleNamespace
 
 import pytest
@@ -20,6 +24,7 @@ from deepref_spark.queries import (
     _scc_aug_edges,
     clear_stage_cache,
 )
+from deepref_spark.session import local_frame
 from tests.conftest import driver_cap
 
 SF = "/root/testdata/sf0.001"
@@ -142,7 +147,8 @@ def _rows(df):
 
 def _twin(spark, monkeypatch, build, fx):
     """Assert both paths return the same rows; return (rows, the side
-    each gate took on the default-cap run: True = driver)."""
+    each gate took on the default-cap run: True = driver, whether that
+    run's output is a LocalRelation)."""
     sides, real = [], L.driver_rows
 
     def gate(df):
@@ -152,18 +158,19 @@ def _twin(spark, monkeypatch, build, fx):
 
     monkeypatch.setattr(G, "driver_rows", gate)
     monkeypatch.setattr(L, "driver_rows", gate)
-    driver = _rows(build(fx))
+    out = build(fx)
+    driver = _rows(out)
     taken = list(sides)
     with driver_cap(spark, 0):
         dist = _rows(build(fx))
     assert driver == dist
-    return driver, taken
+    return driver, taken, out.isLocal()
 
 
 def _sf_test(build):
     def test(spark, sf, monkeypatch):
-        rows, taken = _twin(spark, monkeypatch, build, sf)
-        assert rows and taken and all(taken)
+        rows, taken, local = _twin(spark, monkeypatch, build, sf)
+        assert rows and taken and all(taken) and local
     return test
 
 
@@ -178,9 +185,9 @@ for _name, _build in TWINS:
     if n in ONLY.get(fx, (n,))
 ])
 def test_adversarial_twin(spark, adversarial, monkeypatch, fx, build):
-    _, taken = _twin(spark, monkeypatch, build, adversarial[fx])
+    _, taken, local = _twin(spark, monkeypatch, build, adversarial[fx])
     if fx in ("dirty", "vocab"):
-        assert taken and all(taken)
+        assert taken and all(taken) and local
 
 
 def test_canonical_map_pair_guard(spark, monkeypatch):
@@ -203,3 +210,70 @@ def test_canonical_map_pair_guard(spark, monkeypatch):
     assert solved == [True, False]
     assert guarded == driver
     assert ("smithson01", "smithson00") in driver
+
+
+_ODD = [
+    (1, "plain", [0.5, -0.0], 0.0),
+    (None, "café 東京", None, float("nan")),
+    (-(2 ** 63), None, [None, float("nan")], -0.0),
+    (2 ** 63 - 1, "", [], float("-inf")),
+]
+
+
+def _same(x, y):
+    """Equal, counting NaN as equal to NaN and -0.0 as unequal to 0.0."""
+    if isinstance(x, float) and isinstance(y, float):
+        return (math.isnan(x) and math.isnan(y)) or (
+            x == y and math.copysign(1, x) == math.copysign(1, y))
+    if isinstance(x, list) and isinstance(y, list):
+        return len(x) == len(y) and all(map(_same, x, y))
+    return x == y and type(x) is type(y)
+
+
+@pytest.mark.parametrize("arrow", ["true", "false"])
+def test_local_frame_round_trips(spark, arrow):
+    """NULLs in nullable long, string and array<float> columns,
+    non-ASCII strings, NaN and signed zeros come back exactly, from a
+    LocalRelation, with the Arrow conf on or off."""
+    schema = "id long, s string, v array<float>, d double"
+    spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", arrow)
+    try:
+        df = local_frame(spark, _ODD, schema)
+        empty = local_frame(spark, [], schema)
+        assert df.isLocal() and empty.isLocal()
+        got = [tuple(r) for r in df.collect()]
+        assert empty.collect() == [] and empty.schema == df.schema
+    finally:
+        spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
+    assert len(got) == len(_ODD)
+    for g, w in zip(got, _ODD):
+        assert all(map(_same, g, w)), (g, w)
+
+
+def test_local_frame_rejects_null_in_non_nullable(spark):
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    schema = StructType([StructField("id", LongType(), False)])
+    assert local_frame(spark, [(1,), (2,)], schema).count() == 2
+    with pytest.raises(ValueError):
+        local_frame(spark, [(1,), (None,)], schema)
+
+
+def test_create_dataframe_only_in_local_frame():
+    """Driver-built rows reach a plan through ``local_frame`` alone: a
+    list handed to createDataFrame would be a pickled RDD that a
+    Python worker re-serializes on every read."""
+    def calls(node, fn):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            fn = node.name
+        if (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "createDataFrame"):
+            yield fn
+        for child in ast.iter_child_nodes(node):
+            yield from calls(child, fn)
+
+    root = Path(__file__).resolve().parents[1] / "deepref_spark"
+    found = [(path.relative_to(root).as_posix(), fn)
+             for path in sorted(root.rglob("*.py"))
+             for fn in calls(ast.parse(path.read_text()), "<module>")]
+    assert found == [("session.py", "local_frame")]

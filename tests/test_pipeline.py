@@ -210,6 +210,55 @@ def test_checkpoint_resume_reuses_stage_tables(spark, docs, tmp_path):
     assert sorted(key(r) for r in fresh.collect()) != rows1
 
 
+@pytest.mark.parametrize("partition_by", [None, ["p"]])
+def test_stage_resume_reads_the_manifest_schema(spark, tmp_path, partition_by):
+    """ensure_stage reads a stage with the schema it was written with:
+    the manifest's row count is observed on the write, a resume runs no
+    Spark job (no schema inference), the schema read equals the one
+    inference gives, and a manifest whose schema does not parse still
+    resumes, by inference."""
+    import json
+    import os
+
+    from deepref_spark.io.tables import (
+        MANIFEST, _fs_write_text, ensure_stage, read_stage, stage_path,
+    )
+
+    wh = str(tmp_path / "wh")
+    src = spark.range(7).selectExpr(
+        "id", "CAST(id AS STRING) AS s", "array(CAST(id AS FLOAT), NULL) AS v",
+        "IF(id % 2 = 0, 'x', 'y') AS p")
+    first = ensure_stage(spark, wh, "probe", lambda: src, partition_by)
+    mpath = os.path.join(stage_path(wh, "probe"), MANIFEST)
+    with open(mpath) as f:
+        manifest = json.load(f)
+    assert manifest["rows"] == 7
+    assert manifest["schema"] == src.schema.simpleString()
+    want = sorted(map(tuple, first.collect()))
+    assert len(want) == 7
+
+    def recompute():
+        raise AssertionError("a complete stage was recomputed")
+
+    sc = spark.sparkContext
+    sc.setJobGroup("stage-resume-probe", "resume")
+    try:
+        resumed = ensure_stage(spark, wh, "probe", recompute, partition_by)
+        assert resumed.schema == first.schema
+        jobs = sc.statusTracker().getJobIdsForGroup("stage-resume-probe")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(jobs) == []
+    assert resumed.schema == read_stage(spark, wh, "probe").schema
+    assert sorted(map(tuple, resumed.collect())) == want
+
+    manifest["schema"] = "struct<id:bigint,... 3 more fields>"
+    _fs_write_text(spark, mpath, json.dumps(manifest))
+    inferred = ensure_stage(spark, wh, "probe", recompute, partition_by)
+    assert inferred.schema == first.schema
+    assert sorted(map(tuple, inferred.collect())) == want
+
+
 def test_stage_complete_rejects_corrupt_manifest(spark, docs, tmp_path):
     """A crash-truncated (empty/partial) manifest must NOT mark a stage
     complete — stage_complete validates the JSON, and the temp+rename
